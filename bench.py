@@ -41,7 +41,7 @@ plus every streaming-family entry (s\\d+_*, stream_*) plus every *_e2e
 composite (membership is code, not per-run choice — no per-run
 cherry-picking is possible). The FULL maps (every entry, plus
 ``queries_cold``) stay on the first stdout line unchanged AND are written
-to BENCH_DETAIL.json next to this file.
+to BENCH_DETAIL_c{SPARK_GRAFT_CPUS}.json next to this file.
 """
 
 from __future__ import annotations
@@ -250,25 +250,23 @@ def run_streaming(spark, sf_dir: str) -> dict[str, float]:
     checks. Events are staged as 8 parquet files with maxFilesPerTrigger=4,
     so every figure covers ≥2 micro-batches of source discovery, state
     store traffic, and trigger scheduling."""
-    import shutil
     import tempfile
 
     from pyspark.sql import functions as F
 
     from recommender_systems_pyspark_spark.sources import load_table
     from recommender_systems_pyspark_spark.streaming import engine as se
+    from recommender_systems_pyspark_spark.streaming.staging import (
+        state_sized_partitions,
+    )
 
-    d = tempfile.mkdtemp(prefix="bench_stream_")
     out: dict[str, float] = {}
-    # State-store instances scale with shuffle partitions (one store per
-    # partition per stateful op, re-opened every micro-batch). At this
-    # state volume 32 partitions is pure overhead: measured on the
-    # stream-stream join 32→8 partitions cuts wall-clock 11.2s→3.8s and
-    # the Arrow-stateful op 5.3s→3.1s. The production rule is the same in
-    # reverse — size partitions to state volume, not core count.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # the certified streams' session policy (staging.STREAM_CONFS): UTC and
+    # shuffle partitions sized to state volume, not core count
+    with (
+        tempfile.TemporaryDirectory(prefix="bench_stream_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
         src = d + "/events"
         # Watermarks require TIMESTAMP (LTZ); the fixtures carry
         # TIMESTAMP_NTZ, so the staging write casts (UTC session tz).
@@ -332,19 +330,13 @@ def run_streaming(spark, sf_dir: str) -> dict[str, float]:
             # previous stream's state-store/shuffle leftovers.
             reclaim(spark)
             t0 = time.perf_counter()
-            q = (
+            se.drain(
                 plan()
                 .writeStream.format("noop")
                 .option("checkpointLocation", f"{d}/ck{i}")
                 .outputMode(mode)
-                .start()
             )
-            q.processAllAvailable()
-            q.stop()
             out[name] = round(time.perf_counter() - t0, 4)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        shutil.rmtree(d, ignore_errors=True)
     return out
 
 
@@ -354,7 +346,7 @@ def main() -> None:
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
     from recommender_systems_pyspark_spark.registry import all_queries
-    from recommender_systems_pyspark_spark.session import get_spark
+    from recommender_systems_pyspark_spark.session import default_parallelism, get_spark
 
     spark = get_spark("spark-graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -486,13 +478,16 @@ def main() -> None:
     print(json.dumps(out))
     # Full-detail sidecar (VERDICT r14 next-round #1): everything the
     # stdout contract carries, in a file that cannot be tail-truncated.
+    # Keyed by core count, so an 8-core pass never overwrites the 32-core
+    # record.
+    cpus = default_parallelism()
     try:
         with open(
             os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_DETAIL.json"),
+                         f"BENCH_DETAIL_c{cpus}.json"),
             "w",
         ) as f:
-            json.dump({"cpus": os.environ.get("SPARK_GRAFT_CPUS"), **out}, f)
+            json.dump({"cpus": cpus, **out}, f)
     except OSError:
         pass  # read-only checkout: stdout still carries the full record
     # Truncation-proof FINAL line (VERDICT r11 #2 / r14 next-round #1):
@@ -502,7 +497,7 @@ def main() -> None:
     # fields plus a `queries` map restricted to a FIXED rule-based subset
     # that fits the window: HEADLINE + every streaming-family entry +
     # every *_e2e composite. Membership is this code, identical every
-    # run — the full map is on the first line and in BENCH_DETAIL.json.
+    # run — the full map is on the first line and in BENCH_DETAIL_c*.json.
     summary_names = [
         n
         for n in timings

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.ranking import with_global_row_number
 from ..registry import query
 from ..sources import tables
 
@@ -1232,32 +1233,28 @@ def _kmv_exact_inter(hashed: DataFrame, sizes: DataFrame) -> DataFrame:
     more full exchanges of the shingle universe plus a sort-merge, and
     was the one touched row the r14 driver recorded slower.
 
-    Bit-packing bounds the EXACT AUDIT TIER at 63 sources (loud
-    assert_true, never silent corruption); the sketch tier — the 100 TB
-    path this tier audits — has no such bound. The bit-assignment
-    window runs over the per-source aggregate frame (#sources rows,
-    the same metadata scale the broadcast pair frame already assumes)."""
-    w_src_order = Window.orderBy("source")
-    src_bits = sizes.select(
-        "source", (F.row_number().over(w_src_order) - 1).alias("b")
-    ).select(
-        "source",
-        F.when(
-            F.assert_true(
-                F.col("b") < 63,
-                "KMV exact-intersection audit tier supports at most 63 "
-                "sources (bit-packed membership mask); rely on the sketch "
-                "tier beyond that",
-            ).isNull(),
-            F.col("b"),
-        ).alias("b"),
+    Bit-packing bounds the EXACT AUDIT TIER at 63 sources (a loud
+    ValueError, never silent corruption); the sketch tier — the 100 TB
+    path this tier audits — has no such bound. Bits are the global row
+    number (minus one) over the per-source aggregate frame, ranked in
+    one partition: #sources rows, the same metadata scale the broadcast
+    pair frame already assumes."""
+    ranked, n_sources = with_global_row_number(
+        sizes.select("source"), [F.col("source")], n_parts=1
     )
+    if n_sources > 63:
+        raise ValueError(
+            f"KMV exact-intersection audit tier supports at most 63 sources "
+            f"(bit-packed membership mask), got {n_sources}; rely on the "
+            f"sketch tier beyond that"
+        )
+    src_bits = ranked.select("source", (F.col("_rn") - 1).cast("int").alias("b"))
     masks = (
         hashed.join(F.broadcast(src_bits), "source")
         .groupBy("h")
-        # distinct (source, h) input → SUM of distinct per-source bits
-        # equals the bitwise OR of the memberships
-        .agg(F.sum(F.expr("shiftleft(CAST(1 AS BIGINT), b)")).alias("m"))
+        # bitwise OR, not SUM: a duplicated (source, h) row must not
+        # carry into the next source's bit
+        .agg(F.expr("bit_or(shiftleft(CAST(1 AS BIGINT), b))").alias("m"))
         .groupBy("m")
         .agg(F.count("*").alias("cnt"))
     )

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
+from ..session import scoped_conf
 from ..sources import tables
 from .dedup import _SQL_SHINGLES, jaccard, shingled
 
@@ -775,28 +776,18 @@ def strongly_connected_components(
     )
     assigned: DataFrame | None = None
 
-    # Shuffle partitions ∝ node count, not core count (the streaming
-    # state_sized_partitions rule applied to iterative graph loops): every
-    # round is a shuffle join over frames bounded by |V|, and at
-    # certification volumes 32-way exchanges are pure task-scheduling
-    # overhead — measured 14.5 s → ~6 s warm at sf0.1 going 32 → sized.
-    # The same formula yields thousands of partitions at 100 TB node
-    # counts, so nothing here is local-mode tuning.
-    #
-    # CONCURRENCY CAVEAT (ADVICE r12): the override below mutates the
-    # SESSION-global spark.sql.shuffle.partitions for the duration of the
-    # loop (restored in finally). Any query planned concurrently on the
-    # same SparkSession would silently pick up the loop's partition count.
-    # This engine's bench/verify/driver harnesses are single-threaded per
-    # session, which is the assumption; a caller sharing the session across
-    # threads should hand this function frames from `spark.newSession()`
-    # (per-session conf isolation) before invoking it.
+    # Shuffle partitions ∝ node count, not core count: every round is a
+    # shuffle join over frames bounded by |V|, and at certification
+    # volumes 32-way exchanges are pure task-scheduling overhead —
+    # measured 14.5 s → ~6 s warm at sf0.1 going 32 → sized. The same
+    # formula yields thousands of partitions at 100 TB node counts, so
+    # nothing here is local-mode tuning. The width is session-global for
+    # the loop's duration (see scoped_conf's concurrency note).
     n_nodes = nodes.count()
     if n_nodes == 0:
         return nodes.select("v", F.col("v").alias("scc_id"))
     loop_parts = max(1, min(int(spark.sparkContext.defaultParallelism) * 4,
                             n_nodes // 100_000 + 1))
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
 
     def assign(frame: DataFrame) -> DataFrame:
         nonlocal assigned
@@ -826,8 +817,7 @@ def strongly_connected_components(
             .distinct()
         )
 
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         rem_nodes, rem_edges = nodes, edges
         n_rem = rem_nodes.count()
         for _ in range(max_rounds):
@@ -969,8 +959,6 @@ def strongly_connected_components(
                 f"rounds ({n_rem} nodes unassigned); deep condensation DAG — "
                 "raise max_rounds"
             )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     assert assigned is not None
     return assigned
 
@@ -1252,8 +1240,8 @@ def condensation_levels(edges: DataFrame, scc: DataFrame | None = None) -> DataF
     rows: list[tuple] = []
     lvl = 0
     # Peel at a shuffle width sized to the CONDENSATION's volume (#SCCs),
-    # not the session's core count — the strongly_connected_components /
-    # state_sized_partitions rule (§2.2): every level is a distinct +
+    # not the session's core count — the strongly_connected_components
+    # rule (§2.2): every level is a distinct +
     # anti-join + semi-join over frames bounded by #SCCs, and 32-way
     # exchanges of metadata-scale frames are pure task-scheduling
     # latency × DAG depth. The materialized members count (one action,
@@ -1264,9 +1252,7 @@ def condensation_levels(edges: DataFrame, scc: DataFrame | None = None) -> DataF
         1,
         min(int(spark.sparkContext.defaultParallelism) * 4, n_scc // 100_000 + 1),
     )
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(loop_parts))
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(loop_parts)}):
         while True:
             has_in = rem_edges.select(F.col("b").alias("scc_id")).distinct()
             roots = remaining.join(has_in, "scc_id", "left_anti").localCheckpoint(
@@ -1295,8 +1281,6 @@ def condensation_levels(edges: DataFrame, scc: DataFrame | None = None) -> DataF
                 remaining.select(F.col("scc_id").alias("a")), "a", "left_semi"
             ).localCheckpoint(eager=False)
             lvl += 1
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return spark.createDataFrame(
         rows, "level int, n_sccs long, n_members long, sccs_xor long"
     )

@@ -157,28 +157,30 @@ def ml_user_crud_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
     are deterministic — 2 users; alice has 3 appends but 2 latest."""
     import tempfile
 
-    store = UserStore(spark, tempfile.mkdtemp(prefix="crud_"))
-    store.setup()
-    alice = store.create_user("alice", "alice@example.com")
-    assert store.create_user("alice") is None  # duplicate → rejected
-    assert store.create_user("bob!") is None  # invalid charset → rejected
-    bob = store.create_user("bob_2.test-x")
-    store.add_rating(alice, "tt0111161", 4.5)
-    store.add_rating(alice, "tt0111161", 2.0)  # re-rating: appended, not updated
-    store.add_rating(alice, "tt0068646", 5.0)
-    store.add_rating(bob, "tt0071562", 3.0)
+    with tempfile.TemporaryDirectory(prefix="crud_", ignore_cleanup_errors=True) as d:
+        store = UserStore(spark, d)
+        store.setup()
+        alice = store.create_user("alice", "alice@example.com")
+        assert store.create_user("alice") is None  # duplicate → rejected
+        assert store.create_user("bob!") is None  # invalid charset → rejected
+        bob = store.create_user("bob_2.test-x")
+        store.add_rating(alice, "tt0111161", 4.5)
+        store.add_rating(alice, "tt0111161", 2.0)  # re-rating: appended, not updated
+        store.add_rating(alice, "tt0068646", 5.0)
+        store.add_rating(bob, "tt0071562", 3.0)
 
-    appended = store.ratings().groupBy("user_id").agg(F.count("*").alias("n_appended"))
-    latest = store.latest_ratings().groupBy("user_id").agg(F.count("*").alias("n_latest"))
-    return (
-        store.users()
-        .join(appended, "user_id", "left")
-        .join(latest, "user_id", "left")
-        .select(
-            "username",
-            F.coalesce("n_appended", F.lit(0)).alias("n_appended"),
-            F.coalesce("n_latest", F.lit(0)).alias("n_latest"),
-            (F.coalesce("n_latest", F.lit(0)) >= 10).alias("recs_unlocked"),
+        appended = store.ratings().groupBy("user_id").agg(F.count("*").alias("n_appended"))
+        latest = store.latest_ratings().groupBy("user_id").agg(F.count("*").alias("n_latest"))
+        return (
+            store.users()
+            .join(appended, "user_id", "left")
+            .join(latest, "user_id", "left")
+            .select(
+                "username",
+                F.coalesce("n_appended", F.lit(0)).alias("n_appended"),
+                F.coalesce("n_latest", F.lit(0)).alias("n_latest"),
+                (F.coalesce("n_latest", F.lit(0)) >= 10).alias("recs_unlocked"),
+            )
+            .orderBy("username")
+            .localCheckpoint(eager=True)  # read before the store dir is removed
         )
-        .orderBy("username")
-    )

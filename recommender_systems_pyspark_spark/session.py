@@ -14,11 +14,16 @@ local mode:
 - Arrow enabled so any driver collection / pandas interchange is columnar.
 - Session timezone pinned to UTC so timestamp semantics are stable across
   driver, executors, and the DuckDB correctness oracle.
+
+Per-query conf overrides go through :func:`scoped_conf`, the one
+set-then-restore path, so every query leaves the session as it found it.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator, Mapping
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -107,3 +112,34 @@ def tune_session(spark: SparkSession) -> SparkSession:
         except Exception:  # pragma: no cover - conf may be static in some deployments
             pass
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]:
+    """Set ``confs`` for the body of a ``with`` block, then put every key
+    back as it was: its prior value, or unset if it had none. This is the
+    engine's only set-then-restore path; the only permanent sets are
+    :func:`tune_session`, the loader's ``nanosAsLong`` and
+    ``streaming.engine.use_rocksdb_state``.
+
+    A lazy frame built inside the scope but evaluated after it runs under
+    the RESTORED confs (and after any temp dir opened alongside is gone),
+    so materialise the answer inside the scope — ``localCheckpoint(
+    eager=True)`` or a collect.
+
+    Confs are session-global: a query planned concurrently on the same
+    SparkSession sees the override too. The bench, verify and entry-point
+    harnesses run one query at a time per session; a caller sharing a
+    session across threads should hand each thread ``spark.newSession()``.
+    """
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -32,6 +32,8 @@ idle keys.
 
 from __future__ import annotations
 
+import os
+import tempfile
 from collections.abc import Iterable, Iterator
 
 import numpy as np
@@ -42,6 +44,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_ordered_files, state_sized_partitions
 
 #: Flag when the squared deviation exceeds _K2 × variance (k = 2).
 _K2 = 4
@@ -137,14 +141,10 @@ def s14_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer regardless of micro-batch boundaries, INCLUDING the flags'
     dependence on processing order (an event flagged in batch 2 must see
     precisely the batch-0/1 history the window sees)."""
-    import os
-    import shutil
-    import tempfile
-
-    from .staging import stage_ordered_files, state_sized_partitions
-
-    d = tempfile.mkdtemp(prefix="s14_anomaly_")
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="s14_anomaly_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
         feed = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         )
@@ -155,18 +155,10 @@ def s14_stream_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(os.path.join(d, "src"))
         )
         sink = "s14_stream_anomaly_sink"
-        with state_sized_partitions(spark):
-            q = (
-                anomaly_flags(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("update")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(
+            anomaly_flags(stream)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("update")
+        )
         return spark.table(sink).orderBy("event_id").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

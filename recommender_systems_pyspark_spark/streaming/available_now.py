@@ -1,7 +1,8 @@
 """Trigger.AvailableNow backfill (round 11): the BOUNDED-RUN trigger —
 the scheduled-job face of Structured Streaming that no other query
-exercises. ``processAllAvailable`` (every other certified stream here)
-is a TEST utility: it blocks a long-lived query until it drains.
+exercises. ``engine.drain`` (every other certified stream here) rests on
+``processAllAvailable``, a TEST utility: it blocks a long-lived query
+until it drains.
 ``Trigger.AvailableNow`` is the production backfill contract: the query
 plans the data available AT START, processes it in rate-limited
 micro-batches (``maxFilesPerTrigger`` still applies), commits the final
@@ -38,11 +39,16 @@ operational reasons and must know the answer is invariant.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query, sql_exact_sum
 from ..sources import load_table
+from .staging import stage_ordered_files, state_sized_partitions
 
 _N_FILES = 4
 
@@ -62,20 +68,16 @@ def s18_stream_backfill_available_now(spark: SparkSession, sf_dir: str) -> DataF
     checkpoint (half the files, exit, land the rest, run again) must
     produce exactly the one-shot per-user aggregate — see the module
     docstring for why the bounded-run trigger is its own face."""
-    import os
-    import shutil
-    import tempfile
-
-    from .staging import stage_ordered_files, state_sized_partitions
-
-    d = tempfile.mkdtemp(prefix="s18_backfill_")
-    staged, src, out, ck = (
-        os.path.join(d, "staged"),
-        os.path.join(d, "src"),
-        os.path.join(d, "out"),
-        os.path.join(d, "ck"),
-    )
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="s18_backfill_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
+        staged, src, out, ck = (
+            os.path.join(d, "staged"),
+            os.path.join(d, "src"),
+            os.path.join(d, "out"),
+            os.path.join(d, "ck"),
+        )
         os.makedirs(src)
         feed = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
@@ -111,13 +113,12 @@ def s18_stream_backfill_available_now(spark: SparkSession, sf_dir: str) -> DataF
             # AvailableNow terminates ITSELF once the planned files drain
             q.awaitTermination()
 
-        with state_sized_partitions(spark):
-            for name in batches[:2]:
-                shutil.copy2(f"{staged}/{name}", f"{src}/{name}")
-            backfill()
-            for name in batches[2:]:
-                shutil.copy2(f"{staged}/{name}", f"{src}/{name}")
-            backfill()
+        for name in batches[:2]:
+            shutil.copy2(f"{staged}/{name}", f"{src}/{name}")
+        backfill()
+        for name in batches[2:]:
+            shutil.copy2(f"{staged}/{name}", f"{src}/{name}")
+        backfill()
 
         return (
             spark.read.parquet(out)
@@ -129,5 +130,3 @@ def s18_stream_backfill_available_now(spark: SparkSession, sf_dir: str) -> DataF
             .orderBy("user_id")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

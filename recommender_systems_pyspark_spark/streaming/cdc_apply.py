@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_ordered_files, state_sized_partitions
 
 #: CDC op derivation: every 7th version is a DELETE for its key.
 _DELETE_MOD = 7
@@ -152,9 +154,11 @@ def s12_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys absent). The oracle is the one-shot ``arg_max`` over the whole
     feed — equality certifies the incremental materialization converges
     to the batch answer regardless of micro-batch boundaries."""
-    d = tempfile.mkdtemp(prefix="s12_cdc_")
-    src, state = f"{d}/src", f"{d}/state"
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="s12_cdc_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
+        src, state = f"{d}/src", f"{d}/state"
         feed = changefeed(spark, sf_dir)
         # stage version-quartile files with increasing mtimes so the file
         # source replays the feed in version order — via the SHARED
@@ -165,8 +169,6 @@ def s12_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         # negative version would silently land in batch 0 where the old
         # range predicates dropped it). Identical DIV-span arithmetic;
         # the per-batch max_by fold is row-order-insensitive.
-        from .staging import stage_ordered_files
-
         stage_ordered_files(feed, "version", _N_BATCHES, src)
         stream = (
             spark.readStream.schema(
@@ -176,23 +178,12 @@ def s12_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(src)
         )
         # per-batch shuffles (state read ∪ batch → grouped max_by → state
-        # write) sized to the state volume, not session width — the §2.2
-        # rule every stateful face applies (VERDICT r14 next-round #8's
-        # foreachBatch generalization)
-        from .staging import state_sized_partitions
-
-        q = (
+        # write) run at the state-sized width of the scope above
+        drain(
             stream.writeStream.foreachBatch(
                 lambda batch_df, epoch_id: apply_cdc_batch(batch_df, state, epoch_id)
-            )
-            .option("checkpointLocation", f"{d}/ck")
+            ).option("checkpointLocation", f"{d}/ck")
         )
-        with state_sized_partitions(spark):
-            qq = q.start()
-            try:
-                qq.processAllAvailable()
-            finally:
-                qq.stop()
         final = (
             spark.read.parquet(state)
             .where(F.col("op") != "D")
@@ -205,8 +196,6 @@ def s12_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("user_id")
         )
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------

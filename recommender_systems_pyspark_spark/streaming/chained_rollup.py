@@ -41,11 +41,16 @@ serving store write rate sane.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_ordered_files, state_sized_partitions
 
 _DELAY = "53 minutes"  # off the hour/day grid, same device as s10's 97
 _N_BATCHES = 4
@@ -101,16 +106,10 @@ def s16_stream_hour_day_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     final watermark — hash equality certifies both tiers' finalization
     boundaries and the exact-integer value fold through the chain (the
     fixture's last day stays open and must NOT appear)."""
-    import os
-    import shutil
-    import tempfile
-
-    from .staging import stage_ordered_files
-
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    d = tempfile.mkdtemp(prefix="s16_rollup_")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with (
+        tempfile.TemporaryDirectory(prefix="s16_rollup_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
         feed = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "event_type", "value"
         )
@@ -137,20 +136,12 @@ def s16_stream_hour_day_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         sink = "s16_stream_hour_day_rollup_sink"
-        from .staging import state_sized_partitions
-
-        with state_sized_partitions(spark):
-            q = (
-                hour_day_rollup(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(
+            hour_day_rollup(stream)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("append")
+        )
         return (
             spark.table(sink)
             .select(
@@ -162,9 +153,6 @@ def s16_stream_hour_day_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("window_start", "event_type")
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -276,17 +264,12 @@ def s22_stream_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ ~50 bins per hour on this value domain). Chain depth 1 —
     finalized sketches land in a store and EVERY horizon (s16's
     hour→day cascade included) re-aggregates sketch rows, not events."""
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.stats import _QSK_WIDTH_CENTS
-    from .staging import stage_ordered_files, state_sized_partitions
 
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    d = tempfile.mkdtemp(prefix="s22_qsk_")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with (
+        tempfile.TemporaryDirectory(prefix="s22_qsk_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
         feed = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "value"
         )
@@ -311,18 +294,12 @@ def s22_stream_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         sink = "s22_stream_quantile_rollup_sink"
-        with state_sized_partitions(spark):
-            q = (
-                hourly_histogram_sketch(stream, _QSK_WIDTH_CENTS)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(
+            hourly_histogram_sketch(stream, _QSK_WIDTH_CENTS)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("append")
+        )
         from pyspark.sql import Window
 
         hist = spark.table(sink).select(
@@ -418,9 +395,6 @@ def s22_stream_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("hour")
             .localCheckpoint(eager=True)
         )
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
-        shutil.rmtree(d, ignore_errors=True)
 
 
 s22_stream_quantile_rollup.__doc__ = s22_stream_quantile_rollup.__doc__.replace(

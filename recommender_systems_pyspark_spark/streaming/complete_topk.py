@@ -30,11 +30,16 @@ external serving store — documented contrast, same plan otherwise.
 
 from __future__ import annotations
 
+import os
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_ordered_files, state_sized_partitions
 
 _TOPK = 10
 _N_BATCHES = 4
@@ -70,14 +75,10 @@ def s17_stream_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
     emission is the full, boundary-independent aggregate (nothing
     truncated to the last batch, nothing double-counted across
     re-emissions)."""
-    import os
-    import shutil
-    import tempfile
-
-    from .staging import stage_ordered_files, state_sized_partitions
-
-    d = tempfile.mkdtemp(prefix="s17_topk_")
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="s17_topk_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
         feed = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "value"
         )
@@ -96,18 +97,12 @@ def s17_stream_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         sink = "s17_stream_topk_complete_sink"
-        with state_sized_partitions(spark):
-            q = (
-                running_leaderboard(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("complete")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(
+            running_leaderboard(stream)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("complete")
+        )
         return (
             spark.table(sink)
             .orderBy(F.desc("cents_total"), "user_id")
@@ -115,8 +110,6 @@ def s17_stream_topk_complete(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("user_id", "n_events", "cents_total")
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 s17_stream_topk_complete.__doc__ = s17_stream_topk_complete.__doc__.format(

@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -209,6 +209,18 @@ def start_to_memory(
         .outputMode(output_mode)
         .start()
     )
+
+
+def drain(writer: DataStreamWriter) -> None:
+    """Start ``writer``, run it until every available input is processed,
+    and stop it — also when a batch fails. The one start → drain → stop
+    path of the certified streams (a Trigger.AvailableNow run stops
+    itself and is awaited instead, see streaming.available_now)."""
+    q = writer.start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
 
 
 def start_upsert_sink(

@@ -33,6 +33,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query, sql_exact_sum
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_keyed_files, state_sized_partitions
 
 
 def upsert_batch(batch_df: DataFrame, state_dir: str) -> None:
@@ -95,13 +97,15 @@ def s9_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle is the one-shot batch aggregate — equality certifies that
     the incremental upsert path converges to the batch answer regardless
     of micro-batch boundaries (the associative-decimal-merge contract)."""
-    d = tempfile.mkdtemp(prefix="s9_upsert_")
-    src, state = f"{d}/src", f"{d}/state"
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="s9_upsert_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
+        src, state = f"{d}/src", f"{d}/state"
         load_table(spark, sf_dir, "events").select("user_id", "value").repartition(
             4
         ).write.mode("overwrite").parquet(src)
-        # same stream lifetime s11 runs (incl. the §2.2 state-width conf)
+        # same stream lifetime s11 runs
         _run_upsert_stream(spark, src, state, f"{d}/ck")
         final = spark.read.parquet(state).select(
             "user_id",
@@ -111,8 +115,6 @@ def s9_foreach_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         # pin the (tiny, user-cardinality) result to blocks so the temp
         # dirs can be deleted before the caller's action runs
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -126,8 +128,6 @@ def _stage_user_files(spark: SparkSession, sf_dir: str, src: str, buckets) -> No
     partitioned write per call instead of len(buckets) filtered re-scans
     (the shared stager, guide §1.2/§6; it also stages a 0-row file for an
     empty residue class where the old loop raised IndexError)."""
-    from .staging import stage_keyed_files
-
     os.makedirs(src, exist_ok=True)
     ev = load_table(spark, sf_dir, "events").select("user_id", "value")
     stage_keyed_files(ev, F.col("user_id") % 4, buckets, src)
@@ -135,26 +135,20 @@ def _stage_user_files(spark: SparkSession, sf_dir: str, src: str, buckets) -> No
 
 def _run_upsert_stream(spark: SparkSession, src: str, state: str, ck: str) -> None:
     """One stream lifetime against ``src``: file source (1 file per
-    micro-batch) → foreachBatch merge-upsert → graceful stop. Per-batch
-    shuffles (batch agg + state merge join + state write) run at
-    state-volume width, not session width (§2.2 — VERDICT r14 next-round
-    #8: s9/s11 were the last foreachBatch faces at session width)."""
-    from .staging import state_sized_partitions
-
+    micro-batch) → foreachBatch merge-upsert → graceful stop. Callers run
+    it inside ``state_sized_partitions``, so the per-batch shuffles (batch
+    agg + state merge join + state write) run at state-volume width, not
+    session width."""
     stream = (
         spark.readStream.schema("user_id bigint, value double")
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    w = stream.writeStream.foreachBatch(
-        lambda batch_df, _id: upsert_batch(batch_df, state)
-    ).option("checkpointLocation", ck)
-    with state_sized_partitions(spark):
-        q = w.start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    drain(
+        stream.writeStream.foreachBatch(
+            lambda batch_df, _id: upsert_batch(batch_df, state)
+        ).option("checkpointLocation", ck)
+    )
 
 
 @query(
@@ -185,9 +179,11 @@ def s11_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: identical to s9 — per-batch shuffles of that batch's own
     rows, key-equi merge against the state table."""
-    d = tempfile.mkdtemp(prefix="s11_restart_")
-    src, state, ck = f"{d}/src", f"{d}/state", f"{d}/ck"
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="s11_restart_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
+        src, state, ck = f"{d}/src", f"{d}/state", f"{d}/ck"
         # lifetime 1: only buckets 0,1 exist
         _stage_user_files(spark, sf_dir, src, (0, 1))
         _run_upsert_stream(spark, src, state, ck)
@@ -202,5 +198,3 @@ def s11_restart_recovery(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("total_dec").cast("double").alias("total_value"),
         )
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

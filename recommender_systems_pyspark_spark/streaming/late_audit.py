@@ -51,7 +51,6 @@ the same plan runs against Kafka with the identical watermark semantics
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -59,6 +58,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query, sql_exact_sum
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_keyed_files, state_sized_partitions
 
 _N_BATCHES = 4
 _DELAY = "97 minutes"  # odd on purpose: watermark never lands on the hour grid
@@ -83,8 +84,6 @@ def _stage_batches(spark: SparkSession, sf_dir: str, src: str) -> None:
     # carries the fallback). The watermark aggregation downstream is
     # row-order-insensitive within a batch. user_id % N is total on the
     # feed, so no row can fall outside the staged id set.
-    from .staging import stage_keyed_files
-
     stage_keyed_files(ev, F.col("user_id") % _N_BATCHES, range(_N_BATCHES), src)
 
 
@@ -131,17 +130,15 @@ def s10_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually received. Hash-equality with the oracle certifies the
     watermark-lag / late-drop / finalization semantics end-to-end (see
     module docstring for the replayed rules)."""
-    d = tempfile.mkdtemp(prefix="s10_late_")
-    src = os.path.join(d, "src")
-    sink = "s10_sink_" + os.path.basename(d).removeprefix("s10_late_")
-    # Pin UTC for the whole run (stage → stream → read-back): the NTZ→LTZ
+    # UTC for the whole run (stage → stream → read-back): the NTZ→LTZ
     # cast and the window-start cast back must agree on the wall clock no
-    # matter what session the driver hands us. Restored in finally — the
-    # returned frame is eagerly checkpointed, so the restore can't race a
-    # lazy action.
-    tz_prev = spark.conf.get("spark.sql.session.timeZone", None)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    # matter what session the caller hands us.
+    with (
+        tempfile.TemporaryDirectory(prefix="s10_late_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
+        src = os.path.join(d, "src")
+        sink = "s10_sink_" + os.path.basename(d).removeprefix("s10_late_")
         _stage_batches(spark, sf_dir, src)
         stream = (
             spark.readStream.schema("user_id bigint, ts timestamp, value double")
@@ -156,23 +153,12 @@ def s10_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("value").cast("decimal(18,6)")).alias("tot_dec"),
             )
         )
-        from .staging import state_sized_partitions
-
-        # shuffle width sized to the state volume (one state store per
-        # partition per micro-batch), not the session's core count — the
-        # bench-measured 32→8 rule every other stateful face applies
-        with state_sized_partitions(spark):
-            q = (
-                agg.writeStream.outputMode("append")
-                .format("memory")
-                .queryName(sink)
-                .option("checkpointLocation", os.path.join(d, "ck"))
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(
+            agg.writeStream.outputMode("append")
+            .format("memory")
+            .queryName(sink)
+            .option("checkpointLocation", os.path.join(d, "ck"))
+        )
         final = (
             spark.table(sink)
             .select(
@@ -187,9 +173,3 @@ def s10_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = final.localCheckpoint(eager=True)
         spark.catalog.dropTempView(sink)
         return out
-    finally:
-        if tz_prev is None:
-            spark.conf.unset("spark.sql.session.timeZone")
-        else:
-            spark.conf.set("spark.sql.session.timeZone", tz_prev)
-        shutil.rmtree(d, ignore_errors=True)

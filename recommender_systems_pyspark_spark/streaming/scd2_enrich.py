@@ -21,7 +21,6 @@ micro-batch shuffles only its own facts on the user key.
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +28,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_ordered_files, state_sized_partitions
 
 _N_BATCHES = 4
 
@@ -88,9 +89,11 @@ def s13_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     converges to the batch answer regardless of micro-batch boundaries."""
     from ..functions.warehouse import scd2_history
 
-    d = tempfile.mkdtemp(prefix="s13_scd2_")
-    src, out = f"{d}/src", f"{d}/out"
-    try:
+    with (
+        tempfile.TemporaryDirectory(prefix="s13_scd2_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
+        src, out = f"{d}/src", f"{d}/out"
         ev = load_table(spark, sf_dir, "events")
         # static dimension history, pinned for the stream's lifetime
         hist = (
@@ -113,26 +116,16 @@ def s13_stream_scd2_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the empty-span fallback and non-negative-key guard. Each batch
         # is enriched independently (static dimension), so within-file
         # row order cannot change the accumulated result.
-        from .staging import stage_ordered_files, state_sized_partitions
-
         stage_ordered_files(facts, "event_id", _N_BATCHES, src)
         stream = (
             spark.readStream.schema("event_id bigint, user_id bigint, ts timestamp_ntz")
             .option("maxFilesPerTrigger", 1)
             .parquet(src)
         )
-        # per-batch join/write shuffles sized to the batch volume, not
-        # session width (§2.2 — VERDICT r14 next-round #8)
-        q = stream.writeStream.foreachBatch(
-            lambda batch_df, _id: enrich_batch(batch_df, hist, out)
-        ).option("checkpointLocation", f"{d}/ck")
-        with state_sized_partitions(spark):
-            qq = q.start()
-            try:
-                qq.processAllAvailable()
-            finally:
-                qq.stop()
+        drain(
+            stream.writeStream.foreachBatch(
+                lambda batch_df, _id: enrich_batch(batch_df, hist, out)
+            ).option("checkpointLocation", f"{d}/ck")
+        )
         final = spark.read.parquet(out).orderBy("event_id")
         return final.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

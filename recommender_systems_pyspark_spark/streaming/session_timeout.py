@@ -37,6 +37,8 @@ rows to their key's partition; timeout scans touch only expired keys.
 
 from __future__ import annotations
 
+import os
+import tempfile
 from collections.abc import Iterable, Iterator
 
 import numpy as np
@@ -48,6 +50,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
 from ..sources import load_table
+from .engine import drain
+from .staging import stage_ordered_files, state_sized_partitions
 
 #: Session gap: a quieter stretch than this starts a new session.
 _GAP_MIN = 30
@@ -201,16 +205,10 @@ def s15_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
     overtake an expiry whose successor event is still inside the gap).
     Hash equality certifies the closed-session SET and contents through
     both close paths."""
-    import os
-    import shutil
-    import tempfile
-
-    from .staging import stage_ordered_files
-
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    d = tempfile.mkdtemp(prefix="s15_session_")
-    try:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
+    with (
+        tempfile.TemporaryDirectory(prefix="s15_session_", ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
         feed = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "ts"
         )
@@ -235,33 +233,21 @@ def s15_stream_session_timeout(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("ts", F.col("ts").cast("timestamp"))
         )
         sink = "s15_stream_session_timeout_sink"
-        from .staging import state_sized_partitions
-
-        with state_sized_partitions(spark):
-            q = (
-                session_stream(stream)
-                .writeStream.format("memory")
-                .queryName(sink)
-                .outputMode("append")
-                .start()
-            )
-            try:
-                q.processAllAvailable()
-            finally:
-                q.stop()
+        drain(
+            session_stream(stream)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("append")
+        )
         # close_reason stays OUT of the hash face: whether an interior
         # session closes by 'timeout' or by its successor's ARRIVAL
         # depends on where the batch boundaries fall relative to the
         # watermark (both paths emit the identical session row); the
         # pytest asserts both reasons occur, the oracle certifies the
         # session SET and contents.
-        out = (
+        return (
             spark.table(sink)
             .select("user_id", "session_start", "session_end", "n_events")
             .orderBy("user_id", "session_start")
             .localCheckpoint(eager=True)
         )
-        return out
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
-        shutil.rmtree(d, ignore_errors=True)

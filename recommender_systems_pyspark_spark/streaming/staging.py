@@ -1,4 +1,5 @@
-"""Deterministic micro-batch staging for certified streaming queries.
+"""Deterministic micro-batch staging and the session policy for
+certified streaming queries.
 
 The file source lists files oldest-mtime-first; with
 ``maxFilesPerTrigger=1`` each staged file becomes exactly one micro-batch.
@@ -7,6 +8,19 @@ mtimes therefore replays it as N ordered micro-batches — the mechanism
 behind every hash-certified streaming query here (s12 CDC, s13 SCD2
 enrichment, s14 anomaly): a REAL multi-batch stream whose final answer
 can be compared against a one-shot SQL oracle over the whole feed.
+
+Every certified stream query has the same shape::
+
+    with (
+        tempfile.TemporaryDirectory(prefix=..., ignore_cleanup_errors=True) as d,
+        state_sized_partitions(spark),
+    ):
+        stage_ordered_files(feed, ..., d + "/src")
+        drain(stream.writeStream...)  # streaming.engine.drain
+        return answer.localCheckpoint(eager=True)
+
+The answer is materialised INSIDE both scopes: a lazy frame evaluated
+after them would read deleted files under the caller's confs.
 """
 
 from __future__ import annotations
@@ -14,29 +28,32 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 
-@contextmanager
-def state_sized_partitions(spark: SparkSession, n: int = 8):
-    """Run a streaming query with shuffle partitions sized to its STATE
-    volume instead of the session's core count. Structured Streaming
-    opens one state-store instance per shuffle partition per stateful
-    operator and re-opens each every micro-batch — at certification
-    state volumes 32 partitions is pure store-churn overhead (bench.py
-    measured the stream-stream join at 11.2 s → 3.8 s and the Arrow
-    stateful op 5.3 s → 3.1 s going 32 → 8). The production rule is the
-    same formula in reverse: partitions ∝ state rows, never core count.
-    Restores the prior setting on exit."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
+#: Session confs a certified stream runs under, from staging to its
+#: materialised answer. UTC, so NTZ↔LTZ casts and window bounds agree
+#: with the oracle whatever session the caller hands in. Eight shuffle
+#: partitions, sized to STATE volume instead of the core count:
+#: Structured Streaming opens one state-store instance per shuffle
+#: partition per stateful operator and re-opens each every micro-batch,
+#: so at certification state volumes 32 partitions is pure store churn
+#: (bench.py measured the stream-stream join 11.2 s → 3.8 s and the Arrow
+#: stateful op 5.3 s → 3.1 s going 32 → 8). In production the same rule
+#: runs in reverse: partitions ∝ state rows, never core count.
+STREAM_CONFS = {
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": "8",
+}
+
+
+def state_sized_partitions(spark: SparkSession):
+    """Scope :data:`STREAM_CONFS` over a certified stream's run; the prior
+    confs come back on exit."""
+    return scoped_conf(spark, STREAM_CONFS)
 
 
 def stage_ordered_files(

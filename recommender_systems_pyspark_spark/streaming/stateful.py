@@ -30,6 +30,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..registry import query
+from .engine import drain
+from .staging import state_sized_partitions
 
 #: Emit an alert row flag each time cumulative value crosses k*ALERT_STEP.
 ALERT_STEP = 100.0
@@ -138,11 +140,6 @@ def s4_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     both sides — ADVICE r10), alert count by integer division —
     independent of micro-batch boundaries. This upgraded the query from
     rows-only to hash-certified."""
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    except Exception:  # pragma: no cover - static-conf deployments
-        pass
     # The fixtures store ts as parquet TIMESTAMP(MICROS) → read it as
     # TIMESTAMP_NTZ directly (the old ``ts bigint`` + ``div 1000`` path
     # assumed nano longs and silently produced 1970-era timestamps —
@@ -160,15 +157,11 @@ def s4_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     sink = "s4_stateful_user_totals_sink"
-    q = (
-        cumulative_user_stats(stream)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(sink)
+    with state_sized_partitions(spark):
+        drain(
+            cumulative_user_stats(stream)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("update")
+        )
+        return spark.table(sink).localCheckpoint(eager=True)

@@ -39,14 +39,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # registry import intentionally absent: query not driver-registered (env gate)
+from ..session import scoped_conf
+from .engine import ROCKSDB_PROVIDER, drain  # the only provider TWS supports
+from .staging import STREAM_CONFS
 from .stateful import ALERT_STEP, OUTPUT_SCHEMA
 
 _STATE_SCHEMA = "n bigint, total double, last_us bigint, alerts int"
-
-#: The only state-store provider transformWithState supports.
-ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
 
 
 def _lazy_processor():
@@ -125,17 +123,6 @@ def s7_stateful_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the batch totals; cross-batch carry is proven in
     tests/test_stateful.py. Not driver-registered — see the module
     docstring's environment gate."""
-    prior = None
-    try:
-        prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    except Exception:  # pragma: no cover
-        pass
-    try:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    except Exception:  # pragma: no cover - static-conf deployments
-        pass
     # Fixtures store ts as TIMESTAMP(MICROS) — read as TIMESTAMP_NTZ
     # directly (same 1970-era bug fix as stateful.py's s4).
     raw_schema = (
@@ -148,20 +135,15 @@ def s7_stateful_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(sf_dir)
     )
     sink = "s7_stateful_user_totals_tws_sink"
-    q = (
-        cumulative_user_stats_v2(stream)
-        .writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        if prior:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
-    return spark.table(sink)
+    confs = {**STREAM_CONFS, "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
+    with scoped_conf(spark, confs):
+        drain(
+            cumulative_user_stats_v2(stream)
+            .writeStream.format("memory")
+            .queryName(sink)
+            .outputMode("update")
+        )
+        return spark.table(sink).localCheckpoint(eager=True)
 
 
 def _register_if_protobuf_available() -> bool:

@@ -351,6 +351,7 @@ def test_kmv_sketch_matches_python_replay(spark, sf_dir):
 
     from recommender_systems_pyspark_spark.functions.dedup import (
         _KMV_K,
+        _kmv_exact_inter,
         x_source_overlap_kmv,
     )
 
@@ -386,6 +387,22 @@ def test_kmv_sketch_matches_python_replay(spark, sf_dir):
         assert (got.k_used, got.kmv_both) == (k_used, kmv_both), (sa, sb)
         assert got.exact_inter == len(a & b)
         assert got.exact_union == len(a | b)
+
+    # Duplicated (source, h) rows must leave the exact tier unchanged: the
+    # membership mask is a bitwise OR, so a repeated row cannot carry into
+    # the next source's bit (a SUM of shifted bits would).
+    dup = spark.createDataFrame(
+        [(s, h) for s, hs in universe.items() for h in hs] * 2,
+        "source string, h string",
+    )
+    sizes = dup.groupBy("source").agg(F.count("*").alias("n"))
+    inter = {
+        (r.source_a, r.source_b): r.exact_inter
+        for r in _kmv_exact_inter(dup, sizes).collect()
+    }
+    assert set(inter) <= set(rows)
+    for sa, sb in rows:
+        assert inter.get((sa, sb), 0) == len(universe[sa] & universe[sb]), (sa, sb)
 
 
 def test_kmv_estimate_within_5sigma(spark):

@@ -2,8 +2,8 @@
 bucket fallback (VERDICT r14 what's-wrong #3 / ADVICE r14 #1), the
 ingest-gate fixture invariant (ADVICE r14 #3), the KMV membership-set
 pair expansion that replaced the exact tier's h-keyed self-join
-(VERDICT r14 next-round #2), the LPA session memo, and the condensation
-peel's conf hygiene."""
+(VERDICT r14 next-round #2), the LPA session memo, and the conf hygiene
+of every query that scopes session confs."""
 
 from __future__ import annotations
 
@@ -138,8 +138,6 @@ def test_kmv_bitmask_pairs_match_self_join(spark):
 def test_kmv_bitmask_raises_past_63_sources(spark):
     """The bit-packed audit tier must fail LOUDLY past 63 sources, never
     corrupt a mask silently."""
-    from py4j.protocol import Py4JJavaError
-
     from recommender_systems_pyspark_spark.functions.dedup import (
         _kmv_exact_inter,
     )
@@ -147,7 +145,7 @@ def test_kmv_bitmask_raises_past_63_sources(spark):
     rows = [(f"s{i:03d}", "h1") for i in range(64)]
     hashed = spark.createDataFrame(rows, "source string, h string")
     sizes = hashed.groupBy("source").agg(F.count("*").alias("n"))
-    with pytest.raises(Py4JJavaError, match="at most 63 sources"):
+    with pytest.raises(ValueError, match="at most 63 sources"):
         _kmv_exact_inter(hashed, sizes).collect()
 
 
@@ -171,21 +169,81 @@ def test_cached_lpa_labels_memo_and_equivalence(spark):
     assert got == want
 
 
-def test_condensation_restores_shuffle_partitions(spark):
-    """condensation_levels narrows spark.sql.shuffle.partitions to the
-    condensation's metadata scale for the peel — it must restore the
-    session's setting on exit (success AND failure paths share the
-    finally)."""
+_TZ = "spark.sql.session.timeZone"
+_PARTS = "spark.sql.shuffle.partitions"
+_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+
+
+def _condensation_levels(spark):
     from recommender_systems_pyspark_spark.functions.graph import (
         condensation_levels,
     )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 1), (3, 4)], "src bigint, dst bigint"
     )
-    out = condensation_levels(edges)
-    rows = {(r.level, r.n_sccs, r.n_members) for r in out.collect()}
+    rows = {(r.level, r.n_sccs, r.n_members) for r in condensation_levels(edges).collect()}
     # {1,2,3} is one SCC at level 0; {4} hangs off it at level 1
     assert rows == {(0, 1, 3), (1, 1, 1)}
-    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def _registered(name):
+    def run(spark):
+        from recommender_systems_pyspark_spark.registry import all_queries
+
+        assert all_queries()[name].fn(spark, SF_SMOKE).collect()
+
+    return run
+
+
+def _scoped_conf_unset_key(spark):
+    """A key that was unset before the scope must be unset after it —
+    the path s7's RocksDB provider takes (s7 itself needs
+    google.protobuf, so it cannot run in every environment)."""
+    from recommender_systems_pyspark_spark.session import scoped_conf
+    from recommender_systems_pyspark_spark.streaming.engine import ROCKSDB_PROVIDER
+
+    with scoped_conf(spark, {_PROVIDER: ROCKSDB_PROVIDER, _TZ: "UTC", _PARTS: "3"}):
+        assert spark.conf.get(_PROVIDER) == ROCKSDB_PROVIDER
+        assert (spark.conf.get(_TZ), spark.conf.get(_PARTS)) == ("UTC", "3")
+
+
+@pytest.mark.parametrize(
+    "call",
+    [
+        _condensation_levels,
+        _registered("s4_stateful_user_totals"),
+        _registered("s10_late_data_audit"),
+        _registered("s15_stream_session_timeout"),
+        _registered("x_bucketed_join"),
+        _scoped_conf_unset_key,
+    ],
+    ids=[
+        "condensation_levels",
+        "s4_stateful_user_totals",
+        "s10_late_data_audit",
+        "s15_stream_session_timeout",
+        "x_bucketed_join",
+        "scoped_conf",
+    ],
+)
+def test_call_leaves_session_confs_as_found(spark, call):
+    """Queries that override session confs (UTC, a state- or graph-sized
+    shuffle width, the state-store provider) must leave the session as
+    they found it: a non-UTC zone, a non-default width and an UNSET
+    provider all survive the call unchanged."""
+    prior = {k: spark.conf.get(k, None) for k in (_TZ, _PARTS, _PROVIDER)}
+    spark.conf.set(_TZ, "America/Los_Angeles")
+    spark.conf.set(_PARTS, "7")
+    spark.conf.unset(_PROVIDER)
+    try:
+        call(spark)
+        assert spark.conf.get(_TZ) == "America/Los_Angeles"
+        assert spark.conf.get(_PARTS) == "7"
+        assert spark.conf.get(_PROVIDER, None) is None
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
