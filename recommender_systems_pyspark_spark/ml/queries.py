@@ -181,11 +181,12 @@ def ml_synthetic_weighted_ratings(spark: SparkSession, sf_dir: str) -> DataFrame
 @query("ml_als_top_recs")  # iterative ALS is not SQL-expressible → rows-only
 def ml_als_top_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end ALS surface (M1-M10): derive ratings → index → ALS
-    (seeded, nonnegative, coldStart=drop) → top-3 per user → decode to
-    original ids via the CLUSTER-SIDE dictionaries (TrainResult.user_dim/
-    item_dim — never StringIndexer's driver-held labels). Rows-only check;
-    pytest asserts RMSE ceiling, rank shape, id decode closure, dictionary
-    parity with StringIndexer, and save/load roundtrip."""
+    (seeded, nonnegative, coldStart=drop, one block per 4 MiB of ratings
+    up to the core count) → top-3 per user → decode to original ids via
+    TrainResult.user_dim/item_dim, the fitted indexers' own mapping as
+    checkpointed DataFrames. Rows-only check; pytest asserts RMSE ceiling,
+    rank shape, id decode closure, dictionary parity with StringIndexer,
+    the block count, and save/load roundtrip."""
     from .recommender import AlsConfig, recommend_top_n, train
 
     ratings = ratings_from_events(spark, sf_dir)

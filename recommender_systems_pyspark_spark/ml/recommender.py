@@ -7,6 +7,12 @@ Differences from the reference, each a deliberate scale fix:
 - Index→ID decode is a broadcast JOIN against the indexer's label
   dictionary instead of the reference's two Python closure UDFs
   (utils/recommender.py:164-174) — no JVM→Python round trip per row (M10).
+  ``train`` builds those dictionaries by applying each fitted StringIndexer
+  to the distinct values of the train split: the mapping is the indexer's
+  own, and the dictionary is a checkpointed DataFrame.
+- ALS block counts follow the data: one user and one item block per
+  4 MiB of the ratings' planned size, capped at ``defaultParallelism``
+  (:func:`_als_blocks`), instead of ALS's fixed 10×10.
 - One session, parquet persistence, no JDBC staging.
 
 Kept semantics: explicit-feedback ALS, ``nonnegative=True``,
@@ -17,8 +23,9 @@ seed=42 (``:104``), 3-fold CV on RMSE (``:112-123``), top-N per user
 Scale notes: ALS itself is the shuffle-heavy phase (user/item factor
 exchanges per iteration). The levers at 100 TB are rank (factor matrix
 width), ``als.rank``·users/items memory, checkpointing every ~10 iterations
-(lineage truncation), and blocked factors (ALS's native storage) — all
-inside pyspark.ml; nothing custom required.
+(lineage truncation), and blocked factors (ALS's native storage, one
+block per 4 MiB of ratings up to the core count) — all inside pyspark.ml;
+nothing custom required.
 """
 
 from __future__ import annotations
@@ -64,8 +71,10 @@ class TrainResult:
     n_train: int
     n_test: int
     metrics: dict = field(default_factory=dict)
-    #: Cluster-side label dictionaries over the TRAIN split (what the
-    #: fitted StringIndexers saw) — the scale-safe decode path.
+    #: ``(id, idx)`` label dictionaries of the fitted StringIndexers over
+    #: the TRAIN split, as checkpointed DataFrames (:func:`_indexer_dim`):
+    #: exactly ``{label: float(i)}`` of the indexer's ``labels``. The
+    #: decode path of :func:`recommend_top_n`.
     user_dim: DataFrame | None = None
     item_dim: DataFrame | None = None
 
@@ -95,48 +104,88 @@ def build_pipeline(cfg: AlsConfig) -> Pipeline:
     return Pipeline(stages=[user_idx, item_idx, als])
 
 
+#: Ratings bytes per ALS block: Spark's default
+#: ``spark.sql.files.openCostInBytes``, the smallest split its file scan
+#: makes, so a ratings table gets as many blocks as Spark would split it
+#: into were it one file, up to the core count.
+_ALS_BLOCK_BYTES = 4 << 20
+
+
 def train(ratings: DataFrame, cfg: AlsConfig | None = None, cross_validate: bool = False) -> TrainResult:
     """80/20 seeded split → fit (optionally 3-fold CV) → held-out RMSE.
-    Mirrors utils/recommender.py:87-143 with caching added."""
+    Mirrors utils/recommender.py:87-143 with caching added. ALS runs with
+    :func:`_als_blocks` user and item blocks, and the label dictionaries
+    come from the fitted indexers (:func:`_indexer_dim`), built while the
+    ratings are still cached. The cache is released even when a fit or
+    evaluation raises."""
     cfg = cfg or AlsConfig()
     ratings = ratings.select("user_id", "item_id", "rating").cache()
-    train_df, test_df = ratings.randomSplit([0.8, 0.2], seed=cfg.seed)
+    try:
+        train_df, test_df = ratings.randomSplit([0.8, 0.2], seed=cfg.seed)
 
-    pipeline = build_pipeline(cfg)
-    evaluator = RegressionEvaluator(
-        metricName="rmse", labelCol="rating", predictionCol="prediction"
-    )
-
-    if cross_validate:
+        pipeline = build_pipeline(cfg)
         als = pipeline.getStages()[-1]
-        grid = ParamGridBuilder().addGrid(als.regParam, list(cfg.cv_reg_grid)).build()
-        cv = CrossValidator(
-            estimator=pipeline,
-            estimatorParamMaps=grid,
-            evaluator=evaluator,
-            numFolds=cfg.cv_folds,
-            seed=cfg.seed,
-            parallelism=2,
+        blocks = _als_blocks(ratings)
+        als.setNumUserBlocks(blocks).setNumItemBlocks(blocks)
+        evaluator = RegressionEvaluator(
+            metricName="rmse", labelCol="rating", predictionCol="prediction"
         )
-        model = cv.fit(train_df).bestModel
-    else:
-        model = pipeline.fit(train_df)
 
-    predictions = model.transform(test_df)
-    rmse = float(evaluator.evaluate(predictions))
-    result = TrainResult(
-        model=model,
-        rmse=rmse,
-        n_train=train_df.count(),
-        n_test=test_df.count(),
-        metrics={"rank": cfg.rank, "max_iter": cfg.max_iter},
-        # Same dictionaries the fitted indexers hold, built relationally
-        # from the same split — decode never touches driver-held labels.
-        user_dim=dict_from_column(train_df, "user_id", "user_idx"),
-        item_dim=dict_from_column(train_df, "item_id", "item_idx"),
+        if cross_validate:
+            grid = ParamGridBuilder().addGrid(als.regParam, list(cfg.cv_reg_grid)).build()
+            cv = CrossValidator(
+                estimator=pipeline,
+                estimatorParamMaps=grid,
+                evaluator=evaluator,
+                numFolds=cfg.cv_folds,
+                seed=cfg.seed,
+                parallelism=2,
+            )
+            model = cv.fit(train_df).bestModel
+        else:
+            model = pipeline.fit(train_df)
+
+        predictions = model.transform(test_df)
+        return TrainResult(
+            model=model,
+            rmse=float(evaluator.evaluate(predictions)),
+            n_train=train_df.count(),
+            n_test=test_df.count(),
+            metrics={"rank": cfg.rank, "max_iter": cfg.max_iter},
+            user_dim=_indexer_dim(model, 0, train_df, "user_id", "user_idx"),
+            item_dim=_indexer_dim(model, 1, train_df, "item_id", "item_idx"),
+        )
+    finally:
+        ratings.unpersist()
+
+
+def _als_blocks(ratings: DataFrame) -> int:
+    """ALS user/item block count for ``ratings``: one block per
+    :data:`_ALS_BLOCK_BYTES` of the optimizer's size estimate, at most
+    ``defaultParallelism`` and at least 1. For a file scan the estimate is
+    the files' bytes, scaled to the selected columns, so it follows the
+    data, not the file count: each small file a one-row append adds costs
+    only its parquet footer, so appends and compactions move the block
+    count only across a 4 MiB boundary. Small inputs get one block (ALS's
+    default of 10 would run 10×10 tiny tasks per factor update), large
+    ones spread over every core; a frame Spark cannot size (an RDD-backed
+    one) gets the cap. Reading the estimate runs no job."""
+    parallelism = ratings.sparkSession.sparkContext.defaultParallelism
+    size = int(ratings._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return max(1, min(-(-size // _ALS_BLOCK_BYTES), parallelism))
+
+
+def _indexer_dim(model: PipelineModel, stage: int, df: DataFrame, col: str, idx_col: str) -> DataFrame:
+    """``(col, idx_col)`` dictionary of the fitted StringIndexer at
+    ``stage``: the indexer applied to the distinct values of ``df`` (the
+    split it was fitted on), so the mapping is the indexer's own, exact by
+    construction. Checkpointed eagerly, so it outlives ``df``'s cache."""
+    return (
+        model.stages[stage]
+        .transform(df.select(col).distinct())
+        .select(col, idx_col)
+        .localCheckpoint(eager=True)
     )
-    ratings.unpersist()
-    return result
 
 
 def _label_dim(spark_df_model: PipelineModel, stage: int, id_col: str, idx_col: str) -> DataFrame:
@@ -144,11 +193,11 @@ def _label_dim(spark_df_model: PipelineModel, stage: int, id_col: str, idx_col: 
     Replaces the reference's per-row Python UDF lookups
     (utils/recommender.py:164-174, M10).
 
-    SCALE CAVEAT: ``.labels`` materializes the whole dictionary on the
-    driver (inherent to StringIndexerModel) — at 100× the item dictionary
-    is a driver OOM. Kept for reference parity only; the scale path is
-    :func:`dict_from_column`, which builds the SAME dictionary as a
-    DataFrame that never leaves the cluster."""
+    The fallback decode of :func:`recommend_top_n` when no dictionaries
+    are passed, kept for reference parity. It ships ``.labels`` back
+    through the driver as a local list; :func:`train` already returns the
+    same dictionaries as DataFrames (:func:`_indexer_dim`), which is the
+    path to use."""
     labels = spark_df_model.stages[stage].labels
     spark = SparkSession_active()
     return spark.createDataFrame(
@@ -160,7 +209,10 @@ def dict_from_column(df: DataFrame, col: str, idx_col: str) -> DataFrame:
     """Cluster-side label dictionary: ``(col, n_rows, idx_col)`` with the
     contiguous frequency-desc rank StringIndexer assigns (ties broken by
     value ascending — StringIndexer's 'frequencyDesc' order), built WITHOUT
-    ever collecting labels to the driver.
+    fitting an indexer and without collecting labels to the driver. It
+    serves ``ml_dict_encode_items``; :func:`train` does not use it, since it
+    fits the indexers anyway and takes their mapping (:func:`_indexer_dim`)
+    instead of recomputing it here at about four jobs per dictionary.
 
     Two-phase global rank (the single-partition ``Window.orderBy`` trap is
     avoided): range-repartition the distinct-value counts on the sort key,
@@ -231,10 +283,10 @@ def recommend_top_n(
     array<struct> → join the label dictionaries.
 
     Decode path: pass ``user_dim``/``item_dim`` (TrainResult carries them,
-    built by :func:`dict_from_column`) and the decode is a cluster-side
-    join against DataFrames that never visited the driver — the 100×-safe
-    path. Without dims it falls back to the StringIndexer ``.labels``
-    broadcast (reference parity; driver-bounded)."""
+    the fitted indexers' own mapping as checkpointed DataFrames, see
+    :func:`_indexer_dim`) and the decode is a join against them. Without
+    dims it falls back to shipping the StringIndexer ``.labels`` list
+    through the driver (:func:`_label_dim`; reference parity)."""
     als: ALSModel = model.stages[-1]
     recs = als.recommendForAllUsers(n)
 

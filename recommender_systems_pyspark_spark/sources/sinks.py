@@ -9,7 +9,7 @@ primary sink is parquet; the same operations map to:
 | write.jdbc(mode=overwrite) (S5)    | write.mode('overwrite').parquet         |
 | write.jdbc(mode=append) (S6)       | write.mode('append').parquet            |
 | createTableColumnTypes DDL (S7)    | schema-declared empty parquet dataset   |
-| createDataFrame(rows, schema) (S8) | same API                                |
+| createDataFrame(rows, schema) (S8) | schema-verified rows → Arrow table      |
 | information_schema probe (S10)     | spark.catalog / path existence          |
 
 An optional JDBC connector (jdbc_read/jdbc_write) keeps S2/S5 byte-for-byte
@@ -76,14 +76,47 @@ def create_empty_table(spark: SparkSession, path: str, schema: StructType) -> No
     """S7: DDL-typed creation from an empty DataFrame
     (utils/user.py:74-99's createTableColumnTypes, parquet-native: the
     schema lives in the footer)."""
-    spark.createDataFrame([], schema).write.mode("overwrite").parquet(path)
+    _rows_frame(spark, [], schema).write.mode("overwrite").parquet(path)
 
 
 def insert_rows(spark: SparkSession, path: str, rows: list[Row] | list[tuple], schema: StructType) -> None:
     """S8+S6: local rows → DataFrame → append (add_user_rating,
-    utils/user.py:150-166). Small appends produce small files — compact
-    periodically or land through a streaming sink at scale."""
-    spark.createDataFrame(rows, schema).write.mode("append").parquet(path)
+    utils/user.py:150-166). The frame comes from :func:`_rows_frame`, so a
+    call runs one task, starts no Python worker and adds one parquet file.
+    Small appends produce small files — compact periodically
+    (:func:`compact_table`) or land through a streaming sink at scale."""
+    _rows_frame(spark, rows, schema).write.mode("append").parquet(path)
+
+
+def _rows_frame(spark: SparkSession, rows: list[Row] | list[tuple], schema: StructType) -> DataFrame:
+    """Local rows → one-partition DataFrame through an Arrow table.
+
+    Every row is first checked against ``schema`` by the verifier
+    ``createDataFrame(..., verifySchema=True)`` uses, so a ``None`` in a
+    non-nullable field or a value of the wrong type raises here, before
+    anything is written. Then ``schema.toInternal``, the conversion
+    ``createDataFrame`` applies, reads each row (tuples and ``Row``s by
+    position, dicts by field name) and turns timestamps and dates into the
+    integers Arrow takes. ``createDataFrame(<list>)`` would parallelize the
+    rows over ``defaultParallelism`` slices and convert them in a
+    Python-worker stage; an Arrow table is read by the JVM directly as a
+    local relation: one partition, no Python worker, no pandas and no
+    silent fallback."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _make_type_verifier
+
+    verify = _make_type_verifier(schema)
+    for row in rows:
+        verify(row)
+    internal = [schema.toInternal(row) for row in rows]
+    arrow_schema = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in internal], type=f.type) for i, f in enumerate(arrow_schema)],
+        schema=arrow_schema,
+    )
+    # A local relation scans as min(#rows, defaultParallelism) partitions.
+    return spark.createDataFrame(table, schema).coalesce(1)
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:

@@ -43,3 +43,17 @@ def test_no_duplicate_roster_entries():
     roster = bench.HEADLINE + bench.RECORD_ONLY
     dupes = {n for n in roster if roster.count(n) > 1}
     assert not dupes, f"duplicated bench roster entries (double-timed): {dupes}"
+
+
+def test_final_summary_line_drops_an_oversized_query_map(capsys):
+    """An oversized ``queries`` map moves to stderr; the final line keeps
+    the contract fields, flags the truncation and still parses."""
+    import json
+
+    small = {"metric": "m", "value": 1.0, "queries": {"q": 0.5}}
+    assert json.loads(bench.final_summary_line(small)) == small
+    big = {"metric": "m", "value": 1.0, "queries": {f"q{i:04d}": 0.5 for i in range(200)}}
+    line = bench.final_summary_line(big)
+    assert len(line) < bench.FINAL_LINE_MAX
+    assert json.loads(line) == {"metric": "m", "value": 1.0, "queries_truncated": True}
+    assert json.loads(capsys.readouterr().err) == {"queries": big["queries"]}

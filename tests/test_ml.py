@@ -104,6 +104,107 @@ def test_dict_from_column_matches_stringindexer(spark, trained):
         assert idxs == [float(i) for i in range(len(idxs))]
 
 
+def test_train_dims_are_the_fitted_indexers_labels(trained):
+    """TrainResult's dictionaries are the fitted StringIndexers' own
+    mapping: one row per label, exactly {label: float(i)} over
+    ``.labels``, so the indices are contiguous 0..n-1."""
+    result, _ = trained
+    for stage, dim, col, idx in (
+        (0, result.user_dim, "user_id", "user_idx"),
+        (1, result.item_dim, "item_id", "item_idx"),
+    ):
+        rows = dim.collect()
+        got = {r[col]: r[idx] for r in rows}
+        assert len(rows) == len(got), f"duplicate labels in the {col} dictionary"
+        assert got == {v: float(i) for i, v in enumerate(result.model.stages[stage].labels)}
+
+
+def test_als_blocks_follow_bytes_not_files(spark, sf_dir, tmp_path):
+    """The same ratings as one file and as more files than cores (the
+    shape one-row appends leave behind) get the same block count: one, at
+    fixture size. ALS fits on the many-file table with one user and one
+    item block, not one per file or per core."""
+    from recommender_systems_pyspark_spark.ml.recommender import _als_blocks
+    from recommender_systems_pyspark_spark.ml.users import RATING_SCHEMA
+
+    n_files = spark.sparkContext.defaultParallelism + 2
+    ratings = ratings_from_events(spark, sf_dir).withColumn(
+        "rated_at", F.col("rated_at").cast("timestamp_ntz")
+    )
+    tables = {}
+    for n in (1, n_files):
+        path = str(tmp_path / f"ratings_{n}")
+        ratings.repartition(n).write.parquet(path)
+        tables[n] = spark.read.schema(RATING_SCHEMA).parquet(path)
+    assert tables[n_files].rdd.getNumPartitions() > 1
+    assert _als_blocks(tables[1]) == _als_blocks(tables[n_files]) == 1
+    als = train(tables[n_files], AlsConfig(rank=4, max_iter=3)).model.stages[-1]
+    assert als.userFactors.rdd.getNumPartitions() == 1
+    assert als.itemFactors.rdd.getNumPartitions() == 1
+
+
+def test_als_blocks_grow_with_the_size_estimate(spark):
+    """One block per 4 MiB of the planned size, capped at the core count:
+    a small frame gets one, a ~26 MB one several, a ~26 GB one the cap.
+    The frames are only planned, never run."""
+    import math
+
+    from recommender_systems_pyspark_spark.ml.recommender import _ALS_BLOCK_BYTES, _als_blocks
+
+    parallelism = spark.sparkContext.defaultParallelism
+    got = {}
+    for n in (10**5, 10**6, 10**9):
+        df = spark.range(n).select(
+            F.col("id").cast("string").alias("user_id"),
+            (F.col("id") % 97).cast("string").alias("item_id"),
+            F.lit(1.0).cast("float").alias("rating"),
+        )
+        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+        got[n] = _als_blocks(df)
+        assert got[n] == max(1, min(math.ceil(size / _ALS_BLOCK_BYTES), parallelism))
+    assert got[10**5] == 1 < got[10**6]
+    assert got[10**9] == parallelism
+
+
+def test_train_fits_als_with_the_block_count(spark, sf_dir, monkeypatch):
+    """train() hands _als_blocks' count to ALS for both user and item
+    blocks: the fitted factors are partitioned that way."""
+    from recommender_systems_pyspark_spark.ml import recommender
+
+    monkeypatch.setattr(recommender, "_als_blocks", lambda ratings: 3)
+    als = train(ratings_from_events(spark, sf_dir), AlsConfig(rank=4, max_iter=3)).model.stages[-1]
+    assert als.userFactors.rdd.getNumPartitions() == 3
+    assert als.itemFactors.rdd.getNumPartitions() == 3
+
+
+def test_als_block_lookup_runs_no_job(spark, sf_dir):
+    """Reading the block count off the size estimate of the cached
+    ratings costs no Spark job."""
+    from recommender_systems_pyspark_spark.ml.recommender import _als_blocks
+
+    sc = spark.sparkContext
+    ratings = ratings_from_events(spark, sf_dir).select("user_id", "item_id", "rating").cache()
+    try:
+        sc.setJobGroup("als-block-lookup", "als block lookup")
+        blocks = _als_blocks(ratings)
+        jobs = sc.statusTracker().getJobIdsForGroup("als-block-lookup")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ratings.unpersist()
+    assert blocks >= 1
+    assert jobs == []
+
+
+def test_train_releases_the_ratings_cache_when_fit_raises(spark, sf_dir):
+    """A fit that raises must not leave train()'s ratings cache behind."""
+    from pyspark.errors import IllegalArgumentException
+
+    ratings = ratings_from_events(spark, sf_dir).withColumn("rating", F.lit("not a number"))
+    with pytest.raises(IllegalArgumentException):
+        train(ratings, AlsConfig(rank=4, max_iter=3))
+    assert not ratings.select("user_id", "item_id", "rating").storageLevel.useMemory
+
+
 def test_recommend_decode_via_cluster_dims(spark, trained):
     """The relational-dictionary decode path must produce the same decoded
     recommendations as the StringIndexer-labels fallback path."""
@@ -275,8 +376,10 @@ def test_ranking_quality_ndcg_and_hit_rate_pinned(spark, trained):
     NDCG@10 and hit-rate@10 on the seeded 20% split, so a rank-quality
     regression (factor collapse, decode scramble, seed drift) fails loud.
     Deterministic end to end: seeded split, seeded ALS, fixed session
-    parallelism — bounds are 2/3 of the recorded values (NDCG@10 0.1144,
-    hit-rate@10 0.6667 over 15 evaluable users at fixture scale), slack
+    parallelism — bounds are 2/3 of the values first recorded (NDCG@10
+    0.1144, hit-rate@10 0.6667 over 15 evaluable users at fixture scale,
+    with ALS's default 10×10 blocks; one block per input partition now
+    gives NDCG@10 0.1328, hit-rate@10 0.8000), slack
     for ALS re-convergence noise
     under future Spark upgrades, fatal for real regressions."""
     import math
@@ -341,9 +444,9 @@ def test_als_recall_dominates_cooccurrence_baseline(spark, sf_dir):
     80/20 split, the ALS face's recall@10 must be at least the
     co-occurrence counting baseline's — the factor model has to beat the
     statistic it generalizes, or the training is broken in a way RMSE
-    bounds alone can miss. Measured at fixture scale: ALS 12/94 hits vs
-    co-occurrence 6/94 (recall 0.128 vs 0.064), a 2x margin over the
-    assertion."""
+    bounds alone can miss. Measured at fixture scale: ALS 13/94 hits vs
+    co-occurrence 6/94 (recall 0.138 vs 0.064), a 2x margin over the
+    assertion (12/94 with ALS's default 10×10 blocks)."""
     from pyspark.sql import Window
 
     ratings = ratings_from_events(spark, sf_dir)

@@ -5,10 +5,20 @@ from __future__ import annotations
 
 import gzip
 import tempfile
+from datetime import datetime
 
+import numpy as np
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    FloatType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 from recommender_systems_pyspark_spark.sources.ingest import (
     clean_year,
@@ -102,6 +112,107 @@ def test_write_table_rejects_bad_mode(spark, tmpdir):
     df = spark.range(1)
     with pytest.raises(ValueError, match="unsupported mode"):
         write_table(df, f"{tmpdir}/x", mode="errorifexists")
+
+
+RATING_ROW_SCHEMA = StructType(
+    [
+        StructField("user_id", StringType(), False),
+        StructField("rating", FloatType(), False),
+        StructField("rated_at", TimestampNTZType(), False),
+    ]
+)
+
+
+def _parquet_files(path):
+    import os
+
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
+@pytest.mark.parametrize(
+    "bad",
+    [(None, 4.5, datetime(2024, 1, 1)), ("u1", "4.5", datetime(2024, 1, 1))],
+    ids=["none_in_non_nullable", "str_in_float"],
+)
+def test_insert_rows_rejects_rows_off_schema(spark, tmpdir, bad):
+    """Rows are checked against the schema before anything is written: a
+    bad row raises and leaves the table's files as they were."""
+    path = f"{tmpdir}/ratings"
+    create_empty_table(spark, path, RATING_ROW_SCHEMA)
+    before = _parquet_files(path)
+    with pytest.raises((TypeError, ValueError)):
+        insert_rows(spark, path, [bad], RATING_ROW_SCHEMA)
+    assert _parquet_files(path) == before
+
+
+def test_insert_rows_round_trips_one_file_per_call(spark, tmpdir):
+    """Tuples and Rows both append; timestamp_ntz microseconds and float
+    ratings read back exactly; each call adds exactly one parquet file
+    (the per-call file ml/users.py's appends rely on)."""
+    path = f"{tmpdir}/ratings"
+    create_empty_table(spark, path, RATING_ROW_SCHEMA)
+    calls = [
+        [("u1", 4.5, datetime(2024, 2, 29, 23, 59, 59, 999999))],
+        [Row(user_id="u2", rating=0.1, rated_at=datetime(1999, 12, 31, 0, 0, 0, 1))],
+        [("u3", 3.0, datetime(2024, 1, 1, 12, 0, 0, 123456)), ("u3", 2.0, datetime(2024, 1, 2))],
+    ]
+    for rows in calls:
+        before = set(_parquet_files(path))
+        insert_rows(spark, path, rows, RATING_ROW_SCHEMA)
+        assert len(set(_parquet_files(path)) - before) == 1
+    got = sorted(tuple(r) for r in spark.read.parquet(path).collect())
+    want = sorted(
+        (u, float(np.float32(r)), ts) for rows in calls for (u, r, ts) in rows
+    )
+    assert got == want
+
+
+def test_insert_rows_reads_timestamps_as_create_dataframe_does(spark, tmpdir):
+    """A TimestampType field written through insert_rows holds the same
+    instants as spark.createDataFrame(rows, schema) gives for the same
+    tuple, Row and dict rows, under a non-UTC session time zone."""
+    from pyspark.sql.types import TimestampType
+
+    from recommender_systems_pyspark_spark.session import scoped_conf
+
+    schema = StructType(
+        [StructField("user_id", StringType(), False), StructField("ts", TimestampType(), True)]
+    )
+    rows = [
+        ("u1", datetime(2024, 3, 10, 2, 30, 0, 123456)),
+        Row(user_id="u2", ts=datetime(1999, 12, 31, 23, 59, 59, 999999)),
+        {"ts": datetime(2024, 11, 3, 1, 30), "user_id": "u3"},
+        ("u4", None),
+    ]
+    path = f"{tmpdir}/events"
+    micros = "user_id", F.unix_micros("ts").alias("us")
+    with scoped_conf(spark, {"spark.sql.session.timeZone": "America/New_York"}):
+        insert_rows(spark, path, rows, schema)
+        got = sorted(spark.read.parquet(path).select(*micros).collect())
+        want = sorted(spark.createDataFrame(rows, schema).select(*micros).collect())
+    assert got == want
+    assert [r.us is None for r in got] == [False, False, False, True]
+
+
+def test_insert_rows_runs_no_python_worker(spark, tmpdir, monkeypatch):
+    """The frame insert_rows appends is read by the JVM from Arrow: its RDD
+    lineage has no PythonRDD (createDataFrame of a Python list runs one,
+    over defaultParallelism slices) and it is one partition."""
+    from pyspark.sql import DataFrameWriter
+
+    written = []
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        written.append(self._df)
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    insert_rows(spark, f"{tmpdir}/ratings", [("u1", 4.5, datetime(2024, 1, 1))], RATING_ROW_SCHEMA)
+    (df,) = written
+    rdd = df._jdf.queryExecution().toRdd()
+    assert "PythonRDD" not in rdd.toDebugString()
+    assert rdd.getNumPartitions() == 1
 
 
 def test_imdb_etl_roundtrip(spark, tmp_path):
