@@ -260,15 +260,24 @@ def connected_components_star(
 
     Same contract as :func:`connected_components`; each round is two
     groupBy-min + join steps over the current edge set, converging when
-    the canonical edge set reaches its star-forest fixpoint. Property
-    tests prove both variants agree with driver-side union-find."""
+    the canonical edge set reaches its star-forest fixpoint; still moving
+    after ``max_iter`` rounds is a ``RuntimeError``, as in both siblings.
+    Property tests prove both variants agree with driver-side union-find."""
     e = _canon(edges).localCheckpoint()
+    diff = -1
     for _ in range(max_iter):
         e2 = _small_star(_large_star(e)).localCheckpoint()
         diff = e2.exceptAll(e).count() + e.exceptAll(e2).count()
         e = e2
         if diff == 0:
             break
+    if diff != 0:
+        # a non-fixpoint edge set is not a star forest: its labels would
+        # split components silently
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iter} "
+            f"rounds ({diff} edges still changing); raise max_iter"
+        )
     # fixpoint edges form stars: every member's min closed-neighbour IS the
     # root (roots are their own minimum)
     lbl = (

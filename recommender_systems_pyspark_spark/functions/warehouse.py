@@ -884,7 +884,6 @@ def x_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     two |customers|-sized frames. Doubles (exact decimal sums) and longs
     round-trip parquet bit-exactly, so the store adds nothing to the
     comparison surface."""
-    import shutil
     import tempfile
 
     from ..registry import ts_ntz
@@ -898,9 +897,8 @@ def x_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"), exact_sum(F.col("o_totalprice"), "total")
         )
 
-    d = tempfile.mkdtemp(prefix="snapdiff_")
-    path = d + "/cust_orders"
-    try:
+    with tempfile.TemporaryDirectory(prefix="snapdiff_", ignore_cleanup_errors=True) as d:
+        path = d + "/cust_orders"
         write_snapshot(
             per_customer(orders.where(F.col("o_orderdate") < ts_ntz(_SNAP_CUTOFF))),
             path,
@@ -928,8 +926,6 @@ def x_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("custkey")
         )
         return diff.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 x_snapshot_diff.__doc__ = x_snapshot_diff.__doc__.format(cutoff=_SNAP_CUTOFF)
@@ -1298,14 +1294,12 @@ def x_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     before/after checksum compare is the standard post-OPTIMIZE
     invariant check a lakehouse runs before vacuuming the old files."""
     import os
-    import shutil
     import tempfile
 
     from ..sources.versioned import read_snapshot, write_snapshot
 
     docs = tables(spark, sf_dir)["documents"]
-    d = tempfile.mkdtemp(prefix="x_compaction_apply_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="x_compaction_apply_", ignore_cleanup_errors=True) as d:
         store = os.path.join(d, "docs_store")
         frag = docs.select(
             "source",
@@ -1355,8 +1349,6 @@ def x_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source")
         )
         return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1427,7 +1419,6 @@ def x_snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reference contrast: the app's ``mode="overwrite"`` reload
     (utils/data_loader.py:144-146) IS step 2 with no way back; this
     operator is the missing undo."""
-    import shutil
     import tempfile
 
     from ..sources import load_table
@@ -1441,9 +1432,8 @@ def x_snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_acctbal"
     )
-    d = tempfile.mkdtemp(prefix="snaprestore_")
-    path = d + "/customer_serving"
-    try:
+    with tempfile.TemporaryDirectory(prefix="snaprestore_", ignore_cleanup_errors=True) as d:
+        path = d + "/customer_serving"
         write_snapshot(customer, path)  # v1: good load
         write_snapshot(  # v2: corrupted reload
             customer.where(
@@ -1484,8 +1474,6 @@ def x_snapshot_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         for v, frame in ((2, rows[1]), (3, rows[2])):
             out = out.unionAll(frame.withColumn("on_disk", F.lit(v in alive)))
         return out.orderBy("version").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 x_snapshot_restore.__doc__ = x_snapshot_restore.__doc__.format(
@@ -1570,7 +1558,6 @@ def x_snapshot_asof_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     (utils/data_loader.py:144-146) — "what did the table say when the
     model trained last Tuesday" is unanswerable there; this face is
     that answer."""
-    import shutil
     import tempfile
 
     from ..sources.versioned import version_asof, write_snapshot
@@ -1579,9 +1566,8 @@ def x_snapshot_asof_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = tables(spark, sf_dir)["customer"].select(
         "c_custkey", "c_acctbal"
     )
-    d = tempfile.mkdtemp(prefix="snapasof_")
-    path = d + "/customer_serving"
-    try:
+    with tempfile.TemporaryDirectory(prefix="snapasof_", ignore_cleanup_errors=True) as d:
+        path = d + "/customer_serving"
         kept = customer.where(
             F.col("c_custkey") % _ASOF_DEL_MOD != _ASOF_DEL_REM
         )
@@ -1627,8 +1613,6 @@ def x_snapshot_asof_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
         for f in frames[1:]:
             out = out.unionAll(f)
         return out.orderBy("probe_ts").localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 # ---------------------------------------------------------------------------
@@ -1773,7 +1757,6 @@ def x_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate; publish is the store's atomic manifest swap; the blocked
     candidate costs one staging write + one audit, never a prod write.
     """
-    import shutil
     import tempfile
 
     from ..sources import load_table
@@ -1795,9 +1778,8 @@ def x_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrected = customer.withColumn(
         "bal_cents", F.col("bal_cents") + _WAP_ADJ_CENTS
     )
-    d = tempfile.mkdtemp(prefix="wap_")
-    prod = d + "/prod"
-    try:
+    with tempfile.TemporaryDirectory(prefix="wap_", ignore_cleanup_errors=True) as d:
+        prod = d + "/prod"
         expected_rows = customer.count()  # source-reconciliation target
 
         def audit(df: DataFrame) -> bool:
@@ -1837,8 +1819,6 @@ def x_wap_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
         for frame in ledger[1:]:
             out = out.unionAll(frame)
         return out.orderBy("attempt")
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 x_wap_publish.__doc__ = x_wap_publish.__doc__.format(

@@ -1,9 +1,7 @@
 """Factor-model extensions beyond the reference's explicit-ALS surface:
 implicit-feedback training and related-items from the factor space.
-Registered AFTER the relational/TPC-H blocks (registry._QUERY_MODULES):
-both queries train a model at build time, so they sit outside the driver
-grading window's cheap-oracle region — graded in a later round's window,
-always covered by pytest (tests/test_ml.py).
+Both queries train a model at build time and are rows-only in the driver
+gate; tests/test_ml.py covers them with property tests.
 """
 
 from __future__ import annotations

@@ -223,7 +223,6 @@ def x_mor_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the point-delete → deferred-rewrite protocol that replaces
     it at 100 TB."""
     import os
-    import shutil
     import tempfile
 
     from ..functions.warehouse import (
@@ -234,8 +233,7 @@ def x_mor_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.versioned import read_snapshot, write_snapshot
 
     docs = load_table(spark, sf_dir, "documents")
-    d = tempfile.mkdtemp(prefix="x_mor_compact_")
-    try:
+    with tempfile.TemporaryDirectory(prefix="x_mor_compact_", ignore_cleanup_errors=True) as d:
         store = os.path.join(d, "docs_store")
         rn = F.expr(
             "row_number() OVER (PARTITION BY source ORDER BY doc_id) - 1"
@@ -340,6 +338,4 @@ def x_mor_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("source")
         )
-        return out.localCheckpoint(eager=True)  # materialize before rmtree
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+        return out.localCheckpoint(eager=True)  # materialize before the dir goes

@@ -279,7 +279,6 @@ def _register_malformed_quarantine() -> None:
         of the split come from the same scan. Double→string→double
         round-trips exactly (Java shortest-repr), so the clean cents
         sum equals raw-table arithmetic."""
-        import shutil
         import tempfile
 
         from pyspark.sql.types import (
@@ -311,8 +310,7 @@ def _register_malformed_quarantine() -> None:
                 StructField("value", DoubleType()),
             ]
         )
-        d = tempfile.mkdtemp(prefix="quarantine_")
-        try:
+        with tempfile.TemporaryDirectory(prefix="quarantine_", ignore_cleanup_errors=True) as d:
             feed.write.option("header", True).option("sep", "\t").mode(
                 "overwrite"
             ).csv(d + "/feed")
@@ -332,11 +330,9 @@ def _register_malformed_quarantine() -> None:
                         F.bit_xor("event_id").alias("quarantined_id_xor"),
                     )
                 )
-                .localCheckpoint(eager=True)  # materialize before rmtree
+                .localCheckpoint(eager=True)  # materialize before the dir goes
             )
             return out
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 _register_malformed_quarantine()

@@ -304,13 +304,11 @@ def _register_schema_evolution() -> None:
         production scale pin the merged schema in a metastore instead of
         re-inferring per query — the read path is identical); the ledger
         is one scan + one bounded-key aggregate."""
-        import shutil
         import tempfile
 
         from . import load_table
 
-        d = tempfile.mkdtemp(prefix="schemaevo_")
-        try:
+        with tempfile.TemporaryDirectory(prefix="schemaevo_", ignore_cleanup_errors=True) as d:
             ev = load_table(spark, sf_dir, "events")
             even = F.col("event_id") % 2 == 0
             ev.where(even).select("event_id", "user_id", "value").write.mode(
@@ -336,8 +334,6 @@ def _register_schema_evolution() -> None:
                 .orderBy("event_type")
             )
             return out.localCheckpoint(eager=True)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 _register_schema_evolution()
@@ -399,7 +395,6 @@ def _register_format_roundtrip() -> None:
         uncompressed here — gzip text would be one-task-per-file on
         read); stats are map-side aggregates. The slice predicate is
         pushed to the parquet scan."""
-        import shutil
         import tempfile
 
         sample = (
@@ -414,8 +409,7 @@ def _register_format_roundtrip() -> None:
                 .alias("value_cents"),
             )
         )
-        d = tempfile.mkdtemp(prefix="fmt_roundtrip_")
-        try:
+        with tempfile.TemporaryDirectory(prefix="fmt_roundtrip_", ignore_cleanup_errors=True) as d:
             out = None
             for fmt in sorted(INTERCHANGE_FORMATS):
                 path = f"{d}/{fmt}"
@@ -435,11 +429,9 @@ def _register_format_roundtrip() -> None:
                     "cents_total",
                     "n_types",
                 )
-                frame = stats.localCheckpoint(eager=True)  # read before rmtree
+                frame = stats.localCheckpoint(eager=True)  # read before the dir goes
                 out = frame if out is None else out.unionAll(frame)
             return out.orderBy("format")
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
 
 
 _register_format_roundtrip()

@@ -21,9 +21,9 @@ alert increment each time the cumulative value crosses another multiple of
 through the new API (same batches and assertions as the classic test).
 
 ENVIRONMENT GATE: transformWithState's Python driver worker imports
-google.protobuf (state-server wire protocol); this container ships no
-protobuf and pip is unavailable, so the query is NOT registered in the
-driver gate (see registry._QUERY_MODULES) and the live test skips via
+google.protobuf (state-server wire protocol); where protobuf is missing
+the query is NOT registered in the driver gate
+(:func:`_register_if_protobuf_available`) and the live test skips via
 ``pytest.importorskip("google.protobuf")`` — the same explicit-stub policy
 as the multimodal codec (multimodal/media.py). The operator itself is
 complete and runs wherever protobuf exists.

@@ -1,22 +1,23 @@
 """Executable certification ledger (VERDICT r5 #7).
 
-The registry's 50-slot grading-window choreography is load-bearing for
-certification: the driver grades the first 50 ``queries()`` entries per
-round, ``registry._GRADE_FIRST`` steers the window, and the UNION of
-CORRECTNESS_r*.json files must cover every registered query. That
-invariant used to live in comments; this test makes backlog regressions
-loud — a future round that silently drops a query from the queue (or
-registers one without queueing it) fails here.
+The driver grades the first 50 ``queries()`` entries per round, and
+``registry.all_queries()`` lists them oldest committed grade first
+(``registry.grading_order`` over the CORRECTNESS_r*.json files). The UNION
+of those files must cover every registered query; these tests make backlog
+regressions loud, and pin the ordering rule so that committing a new
+CORRECTNESS file can never turn the suite red.
 """
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
+import sys
+
+import pytest
 
 from recommender_systems_pyspark_spark import registry
 
-REPO = Path(__file__).resolve().parent.parent
+#: The driver grades the first WINDOW entries of ``queries()`` per round.
+WINDOW = 50
 
 #: Queries graded rows-only BY DESIGN (no DuckDB oracle is possible):
 #: ALS/ML model family, nondeterministic uuid()/current_timestamp, and
@@ -37,45 +38,14 @@ ROWS_ONLY_BY_DESIGN = {
     "x_fd_profile_approx",
 }
 
-#: Queries that GAINED a DuckDB oracle after their latest driver grade
-#: (which was therefore recorded as err='no_oracle' rows-only). They are
-#: exempt from the standing-failure hash requirement ONLY until their
-#: next grade, and must sit in _GRADE_FIRST so that grade happens.
-#: r10: s4_stateful_user_totals — its per-user totals are additive
-#: integer-micros, so a one-shot grouped-sum oracle became possible once
-#: the state fold switched to exact micros arithmetic (VERDICT r9 #4).
-# s4_stateful_user_totals completed its upgrade bridge: oracle added in
-# r10, hash-green driver grade recorded in CORRECTNESS_r10.json — no
-# query is currently mid-upgrade.
-NEWLY_ORACLED: set[str] = set()
-
-#: Queries registered THIS round that have not yet had a driver window
-#: AND are not yet queued in _GRADE_FIRST. Adding a query without either
-#: queueing it or listing it here fails the ledger — the list must be
-#: emptied into _GRADE_FIRST when the next window is planned.
-# r9 pendings (fd_profile / feature_hashing / entity_resolution /
-# stream_scd2_enrich / audio_energy / video_shot_boundaries /
-# weighted_sample) drained into the round-10 _GRADE_FIRST window
-# (slots 1-7). Queries newly registered in r10 are slotted into
-# _GRADE_FIRST directly (the window had room), so nothing is pending.
-PENDING_FIRST_GRADE: set[str] = set()
-
-
-def _correctness_rounds() -> list[tuple[str, dict]]:
-    out = []
-    for p in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        with open(p) as fh:
-            out.append((p.name, json.load(fh)))
-    return out
-
 
 def test_every_registered_query_is_certified_or_queued():
-    rounds = _correctness_rounds()
-    assert rounds, "no CORRECTNESS_r*.json files found at repo root"
+    ledger = registry.committed_ledger()
+    assert ledger, "no CORRECTNESS_r*.json files found at repo root"
 
     ever_green: set[str] = set()
     ever_rows_only: set[str] = set()
-    for _, data in rounds:
+    for data in ledger.values():
         for name, rec in data.items():
             if rec.get("hash_match"):
                 ever_green.add(name)
@@ -84,20 +54,13 @@ def test_every_registered_query_is_certified_or_queued():
             elif rec.get("err") in (None, "no_oracle") and rec.get("spark_rows", 0) > 0:
                 ever_rows_only.add(name)
 
-    registered = set(registry.all_queries())
-    queued = set(registry._GRADE_FIRST)
+    order = list(registry.all_queries())
+    queued = set(order[:WINDOW])
 
-    uncovered = (
-        registered
-        - ever_green
-        - (ever_rows_only & ROWS_ONLY_BY_DESIGN)
-        - queued
-        - PENDING_FIRST_GRADE
-    )
+    uncovered = set(order) - ever_green - (ever_rows_only & ROWS_ONLY_BY_DESIGN) - queued
     assert not uncovered, (
         f"registered queries with no driver grade, not rows-only-by-design, "
-        f"and not queued in _GRADE_FIRST or PENDING_FIRST_GRADE: "
-        f"{sorted(uncovered)}"
+        f"and not in the next {WINDOW}-slot grading window: {sorted(uncovered)}"
     )
 
 
@@ -118,12 +81,14 @@ def test_latest_grades_have_no_standing_failures():
     """A query's LATEST driver grade must not be a hash failure or error —
     a regression recorded by a newer round fails here even if an older
     round was green."""
+    ledger = registry.committed_ledger()
     latest: dict[str, tuple[str, dict]] = {}
-    for fname, data in _correctness_rounds():
-        for name, rec in data.items():
-            latest[name] = (fname, rec)
+    for rnd in sorted(ledger):
+        for name, rec in ledger[rnd].items():
+            latest[name] = (f"r{rnd}", rec)
 
-    registered = set(registry.all_queries())
+    order = list(registry.all_queries())
+    registered, window = set(order), set(order[:WINDOW])
     bad = {
         name: (fname, rec)
         for name, (fname, rec) in latest.items()
@@ -136,147 +101,75 @@ def test_latest_grades_have_no_standing_failures():
                 # oracle landed after this (rows-only) grade — legitimate
                 # ONLY while the record is a clean no_oracle row and the
                 # query is queued for its upgrade grade
-                and not (
-                    name in NEWLY_ORACLED and rec.get("err") == "no_oracle"
-                )
+                and not (rec.get("err") == "no_oracle" and name in window)
             )
         )
     }
     assert not bad, f"standing driver-grade failures: {bad}"
 
 
-def test_newly_oracled_are_queued_for_upgrade():
-    """The NEWLY_ORACLED exemption is a one-round bridge: each such query
-    must actually carry an oracle now AND sit in the grading window, or
-    the exemption would hide a permanently-ungraded oracle."""
-    qs = registry.all_queries()
-    for name in NEWLY_ORACLED:
-        assert qs[name].oracle is not None, f"{name} has no oracle"
-        assert name in registry._GRADE_FIRST, f"{name} not queued in _GRADE_FIRST"
-
-
-def test_no_orphaned_query_modules():
-    """Every source module containing a ``@query(`` decorator must be
-    listed in ``registry._QUERY_MODULES`` — otherwise its queries are
-    dead code: never imported, never registered, invisible to the driver,
-    to ``tools/verify_local.py``, AND to every other test in this file
-    (they all inspect only ``all_queries()``). Round 7 shipped three such
-    orphans (functions/bloom.py, functions/dsir.py, operators/zorder.py,
-    ~510 LoC unreachable for a whole round — VERDICT r7 defect #1); this
-    test greps the decorator sites directly so the blind spot cannot
-    recur."""
-    import re
-
-    pkg_root = REPO / "recommender_systems_pyspark_spark"
-    wired = set(registry._QUERY_MODULES)
-    # stateful_v2 self-gates its registration on protobuf availability but
-    # is wired in _QUERY_MODULES regardless, so no special case is needed.
-    orphans = []
-    for path in sorted(pkg_root.rglob("*.py")):
-        text = path.read_text()
-        if not re.search(r"^@query\(", text, flags=re.MULTILINE) and "@query(" not in text:
-            continue
-        mod = ".".join(
-            ("recommender_systems_pyspark_spark",)
-            + path.relative_to(pkg_root).with_suffix("").parts
-        )
-        if mod == "recommender_systems_pyspark_spark.registry":
-            continue  # the decorator's own definition site
-        if mod not in wired:
-            orphans.append(mod)
-    assert not orphans, (
-        f"modules with @query decorators missing from registry._QUERY_MODULES "
-        f"(their queries are unreachable dead code): {orphans}"
-    )
-
-
-def test_grade_first_names_are_registered():
-    """A typo'd or stale name in _GRADE_FIRST silently shrinks the window
-    (the registry drops unknown names) — catch it here instead."""
-    qs = set(registry.all_queries())
-    missing = [n for n in registry._GRADE_FIRST if n not in qs]
-    assert not missing, f"_GRADE_FIRST names not in registry: {missing}"
-
-
-def test_round15_touched_queries_fit_the_grading_window():
-    """Round 15 is an optimization round: every query path its
-    optimizations touch must land inside the driver's 50-slot grading
-    window so the driver re-certifies exactly what changed (the r14-era
-    twin of this test pinned the r7-vintage drain, which CORRECTNESS_r14
-    now records — test_vintage_floor_is_mechanical keeps checking that
-    history mechanically). A later insertion at the head of _GRADE_FIRST
-    could silently push these past the cut — this pins the invariant."""
-    from recommender_systems_pyspark_spark.registry import all_queries
-
-    window = set(list(all_queries())[:50])
-    touched_r15 = {
-        "x_source_overlap_kmv", "x_fd_profile_approx", "x_graph_modularity",
-        "x_label_propagation", "x_semdedup", "x_semdedup_incremental",
-        "x_ingest_gate_e2e", "s9_foreach_upsert", "s11_restart_recovery",
-        "s12_cdc_apply", "s13_stream_scd2_enrich", "s10_late_data_audit",
-        "x_scc_condensation", "x_graph_scc",
-    }
-    missing = touched_r15 - window
-    assert not missing, f"touched entries pushed past slot 50: {sorted(missing)}"
-
-
-#: Queries the round-14 window DEFERS to round 15 (the declared r15
-#: queue — see the _GRADE_FIRST block comment for the deferral rationale).
-#: The 28 r9-vintage rows the round-15 window cannot fit (50 slots −
-#: 14 touched-by-optimization re-certifications − the 15 remaining
-#: r8-vintage rows − 21 oldest r9 rows; see registry._GRADE_FIRST's
-#: block comment). All alphabetically AFTER the 21 r9 rows that did fit
-#: — the mechanical oldest-first/alphabetical rule, no hand-picking.
-DECLARED_NEXT_QUEUE = {
-    "x_embed_rp_project", "x_fingerprint_winnow", "x_forget_users",
-    "x_hybrid_rrf", "x_json_agg_by_bucket", "x_json_extract_typed",
-    "x_length_bucketing", "x_levenshtein_blocked", "x_line_dedup",
-    "x_media_ahash_pairs", "x_media_resize", "x_mixture_interleave",
-    "x_quality_gopher", "x_quality_logit", "x_quota_sample",
-    "x_random_walks", "x_retention_cohorts", "x_schema_evolution",
-    "x_seq_packing", "x_sessionize_stats", "x_shard_assign",
-    "x_snapshot_diff", "x_stopword_prune", "x_target_encoding",
-    "x_text_repetition", "x_triangle_count", "x_tvd_drift",
-    "x_vocab_coverage",
-}
+def _vintages(ledger: dict[int, dict], specs: dict) -> dict[str, int]:
+    """The rule restated: newest round that graded a query, 0 if none did
+    or if that grade was no_oracle and the query has an oracle now."""
+    out = dict.fromkeys(specs, 0)
+    for rnd in sorted(ledger):
+        for name, rec in ledger[rnd].items():
+            if name in specs:
+                due = rec.get("err") == "no_oracle" and specs[name].oracle is not None
+                out[name] = 0 if due else rnd
+    return out
 
 
 def test_vintage_floor_is_mechanical():
-    """VERDICT r13 #1 / what's-wrong #2: CHANGES_r13 CLAIMED a grading
-    vintage floor ("no latest grade older than r8") that was false because
-    nobody computed it from the artifacts. This test computes the floor
-    MECHANICALLY from the committed CORRECTNESS files: every registered
-    query whose latest driver grade is at or below the stale threshold
-    must sit inside the CURRENT 50-slot window (it gets re-graded this
-    round) or be explicitly declared as next round's queue. Any claim a
-    CHANGES file makes about the floor is checkable against this test."""
-    import re
+    """VERDICT r13 #1: a grading vintage floor must be computed from the
+    committed CORRECTNESS files, never claimed. The grading window holds
+    the oldest grades: no query outside it was graded longer ago than any
+    query inside it, and no pre-r7 grade is left waiting. Grading the
+    window (a synthetic next round) moves it on to the next-oldest 50."""
+    specs = registry.all_queries()
+    order = list(specs)
+    ledger = registry.committed_ledger()
+    assert order == registry.grading_order(specs, ledger)
 
-    latest_round: dict[str, int] = {}
-    for fname, data in _correctness_rounds():
-        rnd = int(re.search(r"r(\d+)", fname).group(1))
-        for name in data:
-            latest_round[name] = max(rnd, latest_round.get(name, 0))
-
-    registered = set(registry.all_queries())
-    graded = {n: r for n, r in latest_round.items() if n in registered}
-    assert graded, "no graded registered queries"
-    window = set(list(registry.all_queries())[:50])
-
-    outside = {n: r for n, r in graded.items() if n not in window}
-    floor = min(outside.values())
-    max_round = max(graded.values())
-    # The stale cohort = everything ≥ 5 rounds older than the newest
-    # grade. All of it must be queued (in-window) or declared deferred.
-    stale = {n for n, r in graded.items() if r <= max_round - 5}
-    unhandled = stale - window - DECLARED_NEXT_QUEUE
-    assert not unhandled, (
-        f"stale grades (≤ r{max_round - 5}) neither in the current window "
-        f"nor in the declared next-round queue: {sorted(unhandled)}"
-    )
-    # And the declared deferrals must be the ONLY stale rows left outside
-    # the window — the floor outside the window is exactly what the
-    # CHANGES file may claim, never better.
-    stale_outside = {n for n in stale if n not in window}
-    assert stale_outside <= DECLARED_NEXT_QUEUE
+    vintage = _vintages(ledger, specs)
+    window = order[:WINDOW]
+    floor = min(vintage[n] for n in order[WINDOW:])
+    assert max(vintage[n] for n in window) <= floor
     assert floor >= 7, f"undeclared pre-r7 grade exists (floor r{floor})"
+
+    green = {"hash_match": True, "err": None, "spark_rows": 1}
+    graded = {**ledger, max(ledger) + 1: dict.fromkeys(window, green)}
+    after = registry.grading_order(specs, graded)
+    assert after[:WINDOW] == order[WINDOW : 2 * WINDOW]
+    assert not set(after[:WINDOW]) & set(window)
+
+
+def test_oracle_added_after_a_rows_only_grade_sorts_first():
+    """A no_oracle latest grade of a query that has an oracle now is due
+    its upgrade grade: it leads the order. A rows-only-by-design query
+    with the same record does not."""
+    specs = registry.all_queries()
+    ledger = registry.committed_ledger()
+    upgraded = next(n for n in reversed(list(specs)) if specs[n].oracle is not None)
+    rows_only = sorted(ROWS_ONLY_BY_DESIGN & set(specs))[0]
+    rows_only_rec = {"hash_match": None, "err": "no_oracle", "spark_rows": 5}
+    synthetic = {**ledger, max(ledger) + 1: dict.fromkeys((upgraded, rows_only), rows_only_rec)}
+    order = registry.grading_order(specs, synthetic)
+    assert order[0] == upgraded
+    assert order[-1] == rows_only
+
+
+def test_import_failure_becomes_the_first_entry(monkeypatch):
+    """A module that fails to import is a visible sentinel at the head of
+    the order whose fn re-raises the original traceback; every other
+    module still registers."""
+    before = registry.all_queries()
+    mod = "recommender_systems_pyspark_spark.operators.zorder"
+    monkeypatch.setitem(sys.modules, mod, None)  # makes the import raise
+    after = registry.all_queries()
+
+    sentinel = "zz_import_failure_operators_zorder"
+    assert next(iter(after)) == sentinel
+    with pytest.raises(RuntimeError, match=f"(?s){mod} failed to import.*ModuleNotFoundError"):
+        after[sentinel].fn(None, "")
+    assert set(after) == set(before) | {sentinel}

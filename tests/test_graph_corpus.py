@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -255,17 +256,19 @@ def test_star_components_match_union_find(spark):
         }
         assert got == _union_find(n, edges), f"seed={seed}"
 
-    # chain: diameter 59 must converge well inside max_iter=20 star rounds
+    # chain: diameter 59 must converge well inside max_iter=20 star rounds,
+    # and one round is too few: unconverged labels must raise, not split it
     n = 60
+    chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
     got = {
         r.id: r.component
         for r in connected_components_star(
-            spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long"),
-            spark.range(n).select(F.col("id")),
-            max_iter=20,
+            chain, spark.range(n).select(F.col("id")), max_iter=20
         ).collect()
     }
     assert set(got.values()) == {0}
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        connected_components_star(chain, spark.range(n).select(F.col("id")), max_iter=1)
 
 
 def test_mixture_interleave_upsamples_small_sources(spark, sf_dir):
