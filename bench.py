@@ -31,6 +31,15 @@ is frozen against the r1 baseline). Methodology note for cross-round
 reads: r14 warm rows carry sweep-position residue; r15+ rows do not —
 OPTIMIZATION_r15.md records both protocols side by side for this round.
 
+Codegen policy: the engine sizes Spark's generated-class cache to 4096
+entries (``session.ENGINE_CONFS``). That cache is JVM-wide and outlives
+the per-entry ``spark.stop()``, so a ``queries_cold`` row no longer pays
+Janino compiles for classes that an earlier entry already compiled in
+this JVM; cold rows recorded with Spark's 100-entry cache (r15 and
+earlier) are not directly comparable to later ones. The detail sidecar
+records each run's compile count (a ``CodegenMetrics`` delta around the
+run) under ``codegen_compiles`` and ``codegen_compiles_cold``.
+
 Output contract (VERDICT r14 next-round #1): the driver's stdout capture
 keeps only the LAST ~2000 characters, so the full per-query line (first)
 lost its leading fields once ``queries`` outgrew the window — the driver
@@ -363,19 +372,32 @@ def main() -> None:
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
     from recommender_systems_pyspark_spark.registry import all_queries
-    from recommender_systems_pyspark_spark.session import default_parallelism, get_spark
+    from recommender_systems_pyspark_spark.session import (
+        codegen_compiles,
+        default_parallelism,
+        get_spark,
+    )
 
     spark = get_spark("spark-graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
 
-    def run(name: str) -> float:
+    def run(name: str) -> tuple[float, int]:
+        """Wall seconds and Janino compiles of one noop-forced run."""
         spark.sparkContext.setJobDescription(name)
+        n0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         spark.sparkContext.setJobDescription(None)
-        return dt
+        return dt, codegen_compiles(spark) - n0
+
+    compiles: dict[str, int] = {}
+    compiles_cold: dict[str, int] = {}
+
+    def record(name: str, times: dict[str, float], counts: dict[str, int]) -> None:
+        dt, counts[name] = run(name)
+        times[name] = round(dt, 4)
 
     # Streaming-family entries are split out of the batch sweep and run on
     # a RECYCLED session (VERDICT r12 #2 / what's-wrong fix): after ~100
@@ -429,7 +451,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in HEADLINE:
         if name in specs:
-            timings[name] = round(run(name), 4)
+            record(name, timings, compiles)
 
     # Extension shapes: recorded, not summed (see RECORD_ONLY). Each
     # entry runs twice — cold first (recorded separately), then the
@@ -455,9 +477,9 @@ def main() -> None:
             spark.sparkContext.setLogLevel("ERROR")
             run("tpch_q6")  # per-session warmup, same as tools/measure.py
             reclaim(spark)
-            cold[name] = round(run(name), 4)
+            record(name, cold, compiles_cold)
             reclaim(spark)
-            timings[name] = round(run(name), 4)
+            record(name, timings, compiles)
 
     # --- session recycle: the streaming block runs on a fresh session ---
     # (see stream_batch note above). The batch sweep's primed artifacts
@@ -472,7 +494,7 @@ def main() -> None:
     for name in stream_batch:
         if name in specs:
             reclaim(spark)
-            timings[name] = round(run(name), 4)
+            record(name, timings, compiles)
 
     # Same reclaim before the micro-batch section (state stores compete
     # for the same executor memory).
@@ -504,7 +526,15 @@ def main() -> None:
                          f"BENCH_DETAIL_c{cpus}.json"),
             "w",
         ) as f:
-            json.dump({"cpus": cpus, **out}, f)
+            json.dump(
+                {
+                    "cpus": cpus,
+                    **out,
+                    "codegen_compiles": compiles,
+                    "codegen_compiles_cold": compiles_cold,
+                },
+                f,
+            )
     except OSError:
         pass  # read-only checkout: stdout still carries the full record
     # Truncation-proof FINAL line (VERDICT r11 #2 / r14 next-round #1):

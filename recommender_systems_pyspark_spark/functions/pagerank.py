@@ -188,21 +188,11 @@ def cached_copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     you never recompute it per query). The edge relation is a DISTINCT
     set of long pairs, so the parquet round-trip is exact and every
     consumer sees the identical graph the oracles replay."""
-    import os
+    from ..sources.versioned import load_or_build
 
-    from ..sources.versioned import published_version, read_snapshot, write_snapshot
-
-    cache_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        "graph_edges",
+    return load_or_build(
+        spark, "graph_edges", sf_dir, "copurchase", lambda: copurchase_edges(spark, sf_dir)
     )
-    path = os.path.join(
-        cache_root, os.path.basename(os.path.normpath(sf_dir)) + "_copurchase"
-    )
-    if published_version(path) is None:
-        write_snapshot(copurchase_edges(spark, sf_dir), path)
-    return read_snapshot(spark, path)
 
 
 @query("x_pagerank", oracle=_oracle())
@@ -693,27 +683,16 @@ def _cached_strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialize-the-graph-once discipline as
     :func:`cached_copurchase_edges`, distinct key because the tie gate
     changes the relation."""
-    import os
+    from ..sources.versioned import load_or_build
 
-    from ..sources.versioned import published_version, read_snapshot, write_snapshot
-
-    cache_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
-        "graph_edges",
-    )
-    path = os.path.join(
-        cache_root,
-        f"{os.path.basename(os.path.normpath(sf_dir))}_strong{_KCORE_MIN_CO}",
-    )
-    if published_version(path) is None:
+    def build() -> DataFrame:
         li = (
             tables(spark, sf_dir)["lineitem"]
             .select("l_orderkey", "l_partkey")
             .distinct()
         )
         a, b = li.alias("a"), li.alias("b")
-        edges = (
+        return (
             a.join(
                 b,
                 (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
@@ -726,8 +705,8 @@ def _cached_strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("c") >= _KCORE_MIN_CO)
             .select("src", "dst")
         )
-        write_snapshot(edges, path)
-    return read_snapshot(spark, path)
+
+    return load_or_build(spark, "graph_edges", sf_dir, f"strong{_KCORE_MIN_CO}", build)
 
 
 def _kcore_oracle() -> str:

@@ -387,9 +387,10 @@ def semdedup_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side assignment + within-cell prune. At 100 TB this is the only
     sane shape: the quantizer is model-sized (k×d doubles), refitting it
     per query re-reads the whole corpus twice per Lloyd round. Cache key
-    is the sf-dir basename + iteration count; doubles round-trip parquet
-    bit-exactly, so a reloaded model assigns identically to a fresh fit
-    and the unrolled DuckDB oracle keeps hash-matching."""
+    is a fingerprint of the sf-dir's files + iteration count; doubles
+    round-trip parquet bit-exactly, so a reloaded model assigns
+    identically to a fresh fit and the unrolled DuckDB oracle keeps
+    hash-matching."""
     return cached_centroids(
         spark,
         sf_dir,
@@ -402,24 +403,19 @@ def cached_centroids(
     spark: SparkSession, sf_dir: str, subset: str, train: DataFrame
 ) -> DataFrame:
     """Load-or-train a √N-k-means model for ``train`` (a (vec_id,
-    embedding) frame), keyed by (sf-dir, subset, iters) in the versioned
-    snapshot store. Shared by the full-corpus and incremental semdedup
-    paths."""
-    import os
-
-    from ..sources.versioned import published_version, read_snapshot, write_snapshot
+    embedding) frame), keyed by (sf-dir contents, subset, iters) in the
+    versioned snapshot store. Shared by the full-corpus and incremental
+    semdedup paths."""
+    from ..sources.versioned import load_or_build
     from .vectors import kmeans_sqrtn_model
 
-    cache_root = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-        ".cache",
+    return load_or_build(
+        spark,
         "semdedup_centroids",
+        sf_dir,
+        f"{subset}_i{_SEMDEDUP_ITERS}",
+        lambda: kmeans_sqrtn_model(train, n_iter=_SEMDEDUP_ITERS),
     )
-    key = f"{os.path.basename(os.path.normpath(sf_dir))}_{subset}_i{_SEMDEDUP_ITERS}"
-    path = os.path.join(cache_root, key)
-    if published_version(path) is None:
-        write_snapshot(kmeans_sqrtn_model(train, n_iter=_SEMDEDUP_ITERS), path)
-    return read_snapshot(spark, path)
 
 
 @query("x_semdedup", oracle=_sql_semdedup())

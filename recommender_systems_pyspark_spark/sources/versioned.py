@@ -23,18 +23,29 @@ This is deliberately the local-FS model of what Delta/Iceberg do with a
 transaction log; on object stores the publish step becomes the table
 format's atomic metadata swap. sinks._swap_dirs is the 1-version special
 case of this module.
+
+The same store holds the engine's build-once artifacts (quantizer models,
+graph edge lists) under ``.cache/`` at the checkout root:
+:func:`load_or_build` keys each one by a fingerprint of its input
+directory's files, so a regenerated input rebuilds it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import os
 import re
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 _MANIFEST = "_latest"
 _VDIR = re.compile(r"^v=(\d+)$")
+_CACHE_ROOT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    ".cache",
+)
 
 
 def _versions_on_disk(path: str) -> list[int]:
@@ -182,3 +193,40 @@ def vacuum(path: str, keep_last: int = 2) -> list[int]:
             shutil.rmtree(os.path.join(path, f"v={v}"))
             removed.append(v)
     return removed
+
+
+def _input_fingerprint(sf_dir: str) -> str:
+    """Digest of every file under ``sf_dir`` (symlinks followed): its
+    relative path, size and ``mtime_ns``, sorted by path. Rewriting,
+    adding or removing a file changes it."""
+    entries = []
+    for root, _dirs, files in os.walk(sf_dir, followlinks=True):
+        for name in files:
+            path = os.path.join(root, name)
+            st = os.stat(path)
+            entries.append(f"{os.path.relpath(path, sf_dir)}\t{st.st_size}\t{st.st_mtime_ns}")
+    return hashlib.sha256("\n".join(sorted(entries)).encode()).hexdigest()[:16]
+
+
+def artifact_path(family: str, sf_dir: str, key: str) -> str:
+    """Store path of the ``family``/``key`` artifact built from ``sf_dir``:
+    named after the directory, keyed by the fingerprint of its files, so
+    regenerated inputs get a new path and two same-named directories with
+    different files never share one."""
+    name = os.path.basename(os.path.normpath(sf_dir))
+    return os.path.join(_CACHE_ROOT, family, f"{name}_{key}_{_input_fingerprint(sf_dir)}")
+
+
+def load_or_build(
+    spark: SparkSession,
+    family: str,
+    sf_dir: str,
+    key: str,
+    build: Callable[[], DataFrame],
+) -> DataFrame:
+    """The published artifact at :func:`artifact_path`, writing ``build()``
+    there first when none is published yet."""
+    path = artifact_path(family, sf_dir, key)
+    if published_version(path) is None:
+        write_snapshot(build(), path)
+    return read_snapshot(spark, path)

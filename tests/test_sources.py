@@ -438,3 +438,53 @@ def test_versioned_snapshot_time_travel(spark, tmp_path):
     assert V.read_snapshot(spark, path, version=3).count() == 30
     with pytest.raises(FileNotFoundError):
         V.read_snapshot(spark, path, version=1)
+
+
+def test_artifact_store_keyed_by_input_files(spark, tmp_path):
+    """.cache/ artifacts are keyed by the input directory's files, not its
+    name: an unchanged directory keeps its key, a rewritten input file
+    under the same directory rebuilds the artifact, two same-named
+    directories with different files never share one, and a directory of
+    symlinks keys like the files they point to."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from recommender_systems_pyspark_spark.sources import versioned as V
+
+    family = "test_artifact_store"
+    a, b, link = (tmp_path / d / "sf" for d in ("a", "b", "link"))
+    for d in (a, b, link):
+        d.mkdir(parents=True)
+
+    def write_ids(d, n):
+        pq.write_table(pa.table({"id": list(range(n))}), str(d / "t.parquet"))
+
+    write_ids(a, 10)
+    write_ids(b, 20)
+    os.symlink(a / "t.parquet", link / "t.parquet")
+    built = []
+
+    def load(d):
+        def build():
+            built.append(d)
+            return spark.read.parquet(str(d / "t.parquet"))
+
+        return V.load_or_build(spark, family, str(d), "ids", build).count()
+
+    key_a = V.artifact_path(family, str(a), "ids")
+    try:
+        assert V.artifact_path(family, str(a), "ids") == key_a
+        assert V.artifact_path(family, str(b), "ids") != key_a
+        assert V.artifact_path(family, str(link), "ids") == key_a
+        assert (load(a), load(a), load(b)) == (10, 10, 20)
+        assert built == [a, b]
+
+        write_ids(a, 5)
+        assert V.artifact_path(family, str(a), "ids") != key_a
+        assert load(a) == 5
+        assert built == [a, b, a]
+    finally:
+        shutil.rmtree(os.path.dirname(key_a), ignore_errors=True)
