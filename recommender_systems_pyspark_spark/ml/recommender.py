@@ -39,6 +39,10 @@ from pyspark.ml.recommendation import ALS, ALSModel
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+from ..operators.ranking import with_global_row_number
+from ..sources.sinks import rows_frame
 
 
 @dataclass
@@ -195,14 +199,13 @@ def _label_dim(spark_df_model: PipelineModel, stage: int, id_col: str, idx_col: 
 
     The fallback decode of :func:`recommend_top_n` when no dictionaries
     are passed, kept for reference parity. It ships ``.labels`` back
-    through the driver as a local list; :func:`train` already returns the
+    through the driver as a local list (read by the JVM through Arrow,
+    :func:`sources.sinks.rows_frame`); :func:`train` already returns the
     same dictionaries as DataFrames (:func:`_indexer_dim`), which is the
     path to use."""
     labels = spark_df_model.stages[stage].labels
-    spark = SparkSession_active()
-    return spark.createDataFrame(
-        [(float(i), v) for i, v in enumerate(labels)], schema=f"{idx_col} double, {id_col} string"
-    )
+    schema = StructType([StructField(idx_col, DoubleType()), StructField(id_col, StringType())])
+    return rows_frame(SparkSession_active(), [(float(i), v) for i, v in enumerate(labels)], schema)
 
 
 def dict_from_column(df: DataFrame, col: str, idx_col: str) -> DataFrame:
@@ -214,56 +217,20 @@ def dict_from_column(df: DataFrame, col: str, idx_col: str) -> DataFrame:
     fits the indexers anyway and takes their mapping (:func:`_indexer_dim`)
     instead of recomputing it here at about four jobs per dictionary.
 
-    Two-phase global rank (the single-partition ``Window.orderBy`` trap is
-    avoided): range-repartition the distinct-value counts on the sort key,
-    take per-partition ``row_number`` (window partitioned by partition id —
-    local, parallel), and add each partition's cumulative offset via a
-    broadcast join of one tiny (partition → offset) table. Driver state is
+    The rank is :func:`operators.ranking.with_global_row_number` over the
+    distinct-value counts (a distributed two-phase rank, not the
+    single-partition ``Window.orderBy`` trap). Driver state is
     O(#partitions), never O(#labels) — this is what survives a 1e9-item
-    dictionary where ``StringIndexerModel.labels`` OOMs the driver.
+    dictionary where ``StringIndexerModel.labels`` OOMs the driver. The
+    dictionary comes back checkpointed, freed when the caller drops it.
     """
-    spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     counts = df.groupBy(col).agg(F.count("*").alias("n_rows"))
     # Tie-break on the STRINGIFIED value: StringIndexer sorts its label
     # strings, so numeric columns order '10' < '2' there — the cast keeps
     # parity for any input type (no-op for string columns).
     tie = F.col(col).cast("string").asc()
-    # The range partitioning is cached because the offsets collected below
-    # must describe the SAME partitioning the final ranking runs over —
-    # RangePartitioner re-samples per job, so an uncached recompute could
-    # place boundaries differently and corrupt the ranks.
-    ranged = (
-        counts.repartitionByRange(n_parts, F.col("n_rows").desc(), tie)
-        .withColumn("_pid", F.spark_partition_id())
-        .cache()
-    )
-    sizes = ranged.groupBy("_pid").agg(F.count("*").alias("sz")).collect()
-    offsets, acc = [], 0
-    for r in sorted(sizes, key=lambda r: r["_pid"]):
-        offsets.append((r["_pid"], acc))
-        acc += r["sz"]
-    off_df = spark.createDataFrame(offsets or [], schema="_pid int, _off bigint")
-
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_pid").orderBy(F.col("n_rows").desc(), tie)
-    dim = (
-        ranged.join(F.broadcast(off_df), "_pid")
-        .select(
-            col,
-            "n_rows",
-            (F.row_number().over(w) - 1 + F.col("_off")).cast("double").alias(idx_col),
-        )
-    )
-    # Materialize the dictionary and truncate lineage so the helper's cache
-    # can be released NOW instead of leaking a cached block per call (the
-    # returned frame otherwise keeps `ranged` alive forever). The
-    # checkpointed blocks are the dictionary itself — freed when the caller
-    # drops the DataFrame.
-    dim = dim.localCheckpoint(eager=True)
-    ranged.unpersist()
-    return dim
+    ranked, _ = with_global_row_number(counts, [F.col("n_rows").desc(), tie], alias="_rn")
+    return ranked.select(col, "n_rows", (F.col("_rn") - 1).cast("double").alias(idx_col))
 
 
 def SparkSession_active():

@@ -5,16 +5,17 @@ without the single-partition window trap.
 SinglePartition`` + one sort of the ENTIRE input on one task — the classic
 scale killer Spark itself warns about ("No Partition Defined for Window
 operation"). The helpers here produce byte-identical results with a
-DISTRIBUTED plan, the same two-phase scheme as
-``ml.recommender.dict_from_column``:
+DISTRIBUTED plan (``ml.recommender.dict_from_column`` ranks its labels
+with it too):
 
 1. ``repartitionByRange`` on the sort key — a sampled range shuffle, so the
    sort is parallel and each partition holds a contiguous key range;
 2. per-partition ``row_number`` (window partitioned by partition id —
    local, no second shuffle);
 3. add each partition's cumulative row offset via a broadcast join of one
-   tiny (partition → offset) table. Driver state is O(#partitions), never
-   O(rows).
+   tiny (partition → offset) table, built from the driver's list through
+   Arrow (``sources.sinks.rows_frame``: no Python-worker stage). Driver
+   state is O(#partitions), never O(rows).
 
 ``NTILE(n)`` is then pure arithmetic on the global row number: with N rows,
 the first ``N mod n`` buckets get ``ceil(N/n)`` rows, the rest ``floor(N/n)``
@@ -30,6 +31,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from ..sources.sinks import rows_frame
+
+_OFFSETS_SCHEMA = StructType([StructField("_pid", IntegerType()), StructField("_off", LongType())])
 
 
 def with_global_row_number(
@@ -62,7 +68,7 @@ def with_global_row_number(
     for r in sorted(sizes, key=lambda r: r["_pid"]):
         offsets.append((r["_pid"], acc))
         acc += r["sz"]
-    off_df = spark.createDataFrame(offsets or [(0, 0)], schema="_pid int, _off bigint")
+    off_df = rows_frame(spark, offsets or [(0, 0)], _OFFSETS_SCHEMA)
     w = Window.partitionBy("_pid").orderBy(*order)
     out = (
         ranged.join(F.broadcast(off_df), "_pid")

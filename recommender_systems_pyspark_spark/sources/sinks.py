@@ -76,20 +76,22 @@ def create_empty_table(spark: SparkSession, path: str, schema: StructType) -> No
     """S7: DDL-typed creation from an empty DataFrame
     (utils/user.py:74-99's createTableColumnTypes, parquet-native: the
     schema lives in the footer)."""
-    _rows_frame(spark, [], schema).write.mode("overwrite").parquet(path)
+    rows_frame(spark, [], schema).write.mode("overwrite").parquet(path)
 
 
 def insert_rows(spark: SparkSession, path: str, rows: list[Row] | list[tuple], schema: StructType) -> None:
     """S8+S6: local rows → DataFrame → append (add_user_rating,
-    utils/user.py:150-166). The frame comes from :func:`_rows_frame`, so a
+    utils/user.py:150-166). The frame comes from :func:`rows_frame`, so a
     call runs one task, starts no Python worker and adds one parquet file.
     Small appends produce small files — compact periodically
     (:func:`compact_table`) or land through a streaming sink at scale."""
-    _rows_frame(spark, rows, schema).write.mode("append").parquet(path)
+    rows_frame(spark, rows, schema).write.mode("append").parquet(path)
 
 
-def _rows_frame(spark: SparkSession, rows: list[Row] | list[tuple], schema: StructType) -> DataFrame:
-    """Local rows → one-partition DataFrame through an Arrow table.
+def rows_frame(spark: SparkSession, rows: list[Row] | list[tuple], schema: StructType) -> DataFrame:
+    """Local rows → one-partition DataFrame through an Arrow table: the
+    engine's way to turn a driver-side list into a frame (appends, empty
+    tables, rank offsets, label dictionaries).
 
     Every row is first checked against ``schema`` by the verifier
     ``createDataFrame(..., verifySchema=True)`` uses, so a ``None`` in a

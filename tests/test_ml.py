@@ -495,3 +495,35 @@ def test_als_recall_dominates_cooccurrence_baseline(spark, sf_dir):
         f"ALS recall must dominate the co-occurrence baseline: "
         f"ALS hits {als_hits} vs co-occurrence {co_hits}"
     )
+
+
+def test_driver_built_frames_run_no_python_worker(spark, trained, monkeypatch):
+    """The small frames the rank and decode helpers build from driver lists
+    (rank offsets, indexer labels) are Arrow local relations: no plan they
+    feed scans an RDD. ``createDataFrame(<list>)`` plans as ``Scan
+    ExistingRDD``, a PythonRDD over ``defaultParallelism`` slices: one
+    Python task per slice, for a handful of rows. The helpers' ranks and
+    labels are checked by the StringIndexer-parity tests above and the
+    row_number property tests."""
+    from recommender_systems_pyspark_spark.ml.recommender import _label_dim, dict_from_column
+    from recommender_systems_pyspark_spark.operators.ranking import with_global_row_number
+
+    ids = spark.range(50).select((F.col("id") % 7).alias("k"), "id")
+    plans = []
+    checkpoint = type(ids).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(ids), "localCheckpoint", spy)
+    result, _ = trained
+    with_global_row_number(ids, [F.col("k"), F.col("id")])
+    dict_from_column(ids, "k", "k_idx")
+    assert len(plans) == 2
+    labels = _label_dim(result.model, 1, "item_id", "item_idx")
+    plans.append(labels._jdf.queryExecution().executedPlan().toString())
+    for plan in plans:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    got = {r.item_id: r.item_idx for r in labels.collect()}
+    assert got == {v: float(i) for i, v in enumerate(result.model.stages[1].labels)}

@@ -273,12 +273,17 @@ def test_second_headline_pass_compiles_nothing(spark):
 def test_tune_session_sets_every_modifiable_engine_conf(spark):
     """On a session with the engine confs unset, tune_session sets every
     runtime-modifiable ENGINE_CONFS key to its engine value and skips the
-    static ones (the codegen cache size) without raising."""
+    static ones (the codegen cache size, the Python workers' daemon and
+    path) without raising."""
     from recommender_systems_pyspark_spark.session import ENGINE_CONFS, tune_session
 
     session = spark.newSession()
     runtime = {k: v for k, v in ENGINE_CONFS.items() if session.conf.isModifiable(k)}
-    assert set(ENGINE_CONFS) - set(runtime) == {"spark.sql.codegen.cache.maxEntries"}
+    assert set(ENGINE_CONFS) - set(runtime) == {
+        "spark.sql.codegen.cache.maxEntries",
+        "spark.executorEnv.PYTHONPATH",
+        "spark.python.daemon.module",
+    }
     for k in runtime:
         session.conf.unset(k)
     assert tune_session(session) is session
