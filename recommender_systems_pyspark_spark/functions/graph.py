@@ -8,33 +8,36 @@ closure is a connected-components computation, which the reference
 the LLM-pipeline extension surface (SURVEY.md §2.13).
 
 Scale architecture (100 TB):
-- The components loop is min-label propagation expressed as DataFrame joins:
-  each iteration is one shuffle join edges⋈labels + one groupBy(min) — no
-  driver-side graph state, no collect. Iterations = graph diameter; dedup
-  components are near-cliques (every member is a near-copy of the same
-  content), so the diameter is tiny (2-3) regardless of corpus size.
-  For adversarially long chain graphs the standard fix is the
-  large-star/small-star algorithm (Kiveris et al., "Connected Components in
-  MapReduce and Beyond"), which converges in O(log n) rounds with the same
-  join-per-round shape.
-- Each iteration's label frame is eagerly ``localCheckpoint``-ed: the
-  logical plan references the previous labels twice per round (neighbour
-  join + convergence diff), so without lineage truncation the plan tree
-  grows ~3× per iteration and the DRIVER dies building it long before any
-  data problem. Checkpointing makes every round's plan O(1). On a
-  multi-executor cluster prefer ``checkpoint()`` to a reliable directory
-  (``sparkContext.setCheckpointDir``) so lost executors can recompute;
-  local mode has no such failure domain.
+- :func:`connected_components` is the one undirected-components algorithm:
+  hash-to-min label propagation (Rastogi et al., "Finding Connected
+  Components in Map-Reduce in Logarithmic Rounds") expressed as DataFrame
+  joins. Each round is one join edges⋈labels, one label-keyed pointer
+  self-join of the labels and one groupBy(min) over the union of those
+  messages — no driver-side graph state, no collect. The pointer term
+  halves label chains, so chain-shaped graphs (drifting near-copies,
+  sequential entity names) converge in O(log diameter) rounds;
+  near-clique dedup clusters take 2-3.
+- The edge plan (an all-pairs verifier, an LSH candidate join, a blocked
+  match) is the costly intermediate: it runs exactly once, materialised
+  as a leaf that every round scans in both directions.
+- Each round's label frame is eagerly ``localCheckpoint``-ed: the logical
+  plan references the previous labels three times per round, so without
+  lineage truncation the plan tree grows geometrically and the DRIVER
+  dies building it long before any data problem. Checkpointing makes
+  every round's plan O(1). On a multi-executor cluster prefer
+  ``checkpoint()`` to a reliable directory (``sparkContext.setCheckpointDir``)
+  so lost executors can recompute; local mode has no such failure domain.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..registry import query
 from ..session import scoped_conf
-from ..sources import tables
+from ..sources import sinks, tables
 from .dedup import _SQL_SHINGLES, jaccard, shingled
 
 
@@ -43,254 +46,68 @@ def connected_components(
     nodes: DataFrame,
     max_iter: int | None = None,
 ) -> DataFrame:
-    """Min-label propagation over an undirected edge list.
+    """Connected components of an undirected edge list by hash-to-min.
 
     ``edges`` needs columns (src, dst); ``nodes`` needs column (id) and must
     contain every endpoint (isolated nodes become singleton components).
     Returns (id, component) where component = min node id reachable.
 
-    Each round: every node takes the min of its own label and its
-    neighbours' labels; converged when no label changes. The symmetric edge
-    closure means labels flow both directions, so the fixpoint is the true
-    component minimum.
+    Each round every node takes the least of its own label, its
+    neighbours' labels and its LABEL'S label (the pointer jump). Labels
+    only decrease and are always a reachable node id; a label is stable
+    only when it is neighbour- and pointer-stable, i.e. the component
+    minimum. Converged when no label moves.
 
-    ``max_iter`` defaults to the node count (propagation needs ≤ diameter
-    ≤ n-1 rounds, so the default can NEVER stop early — it is purely a
-    runaway backstop; ADVICE r3 flagged the old fixed 25, which a sparse
-    200-node random graph legitimately exceeds). Pass an explicit bound
-    only when an unconverged-beyond-that-bound graph should be an error.
-    """
-    sym = (
-        edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .localCheckpoint()  # edge plans (e.g. an all-pairs verifier or an
-        # LSH candidate join) can be expensive — materialize once, reuse
-        # every round with a leaf-plan scan
-    )
+    ``max_iter`` defaults to the node count (a runaway backstop that can
+    never stop a converging run early). Pass an explicit bound only when
+    a graph still moving after it should be an error."""
+    e = edges.select("src", "dst").localCheckpoint()
+    sym = e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
     labels = nodes.select(F.col("id"), F.col("id").alias("component")).localCheckpoint()
     if max_iter is None:
         max_iter = max(8, labels.count())  # one cheap count on the leaf plan
     changed = -1
     for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
+        # Each node's candidate labels as messages keyed by the receiver:
+        # its own label (flagged, so a move shows), every neighbour's label
+        # and its label's label (the pointer jump). One groupBy(min) takes
+        # the least of them, with no join back onto the label frame.
+        own = labels.select("id", F.col("component").alias("m"), F.lit(True).alias("own"))
+        nbr = sym.join(labels, sym.src == labels.id).select(
+            F.col("dst").alias("id"), F.col("component").alias("m"), F.lit(False).alias("own")
         )
-        # convergence flag rides the label frame (the hashmin shape):
-        # min-label updates are monotone, so "changed" is exactly
-        # "new < old" — one leaf-plan count instead of the old
-        # new-vs-old equi-join per round
-        new_col = F.least(
-            F.col("component"), F.coalesce("nbr_min", F.col("component"))
+        ptr = (
+            labels.alias("l")
+            .join(labels.alias("p"), F.col("l.component") == F.col("p.id"))
+            .select(
+                F.col("l.id").alias("id"), F.col("p.component").alias("m"), F.lit(False).alias("own")
+            )
         )
         new_labels = (
-            labels.join(nbr, "id", "left")
-            .select(
-                "id",
-                new_col.alias("component"),
-                (new_col < F.col("component")).alias("moved"),
+            own.unionAll(nbr)
+            .unionAll(ptr)
+            .groupBy("id")
+            .agg(
+                F.min("m").alias("component"),
+                F.min(F.when(F.col("own"), F.col("m"))).alias("old"),
             )
-            .localCheckpoint()  # eager: truncates lineage AND materializes
+            .select("id", "component", (F.col("component") < F.col("old")).alias("moved"))
+            .localCheckpoint()  # eager: one materialization job per round
         )
+        # labels only decrease, so "moved" is exactly "changed": one
+        # leaf-plan count instead of a new-vs-old join per round
         changed = new_labels.where(F.col("moved")).count()
         labels = new_labels.drop("moved")
         if changed == 0:
             break
     if changed != 0:
-        # Unconverged labels would silently corrupt every downstream dedup
-        # decision (and hash-mismatch the exact-transitive-closure oracles
-        # in x_dedup_e2e) — fail loudly instead (ADVICE r3). min-label
-        # propagation converges in <= graph diameter rounds, so hitting
-        # this means pathological chain-shaped dup clusters: raise
-        # max_iter, or switch the caller to large-star/small-star
-        # (O(log n) rounds) if diameters like this are expected.
+        # unconverged labels would split components silently and corrupt
+        # every downstream dedup decision — fail loudly instead
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter"
+            f"({changed} labels still moving); raise max_iter"
         )
     return labels
-
-
-def connected_components_hashmin(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int | None = None,
-) -> DataFrame:
-    """Connected components via min-label propagation WITH pointer
-    doubling (the hash-to-min idea of Rastogi et al., "Finding Connected
-    Components in Map-Reduce in Logarithmic Rounds"): each round a node
-    takes the min of (its label, its neighbours' labels, its LABEL'S
-    label). The third term is the pointer jump — label chains halve every
-    round, so convergence needs O(log diameter) rounds where plain
-    min-label propagation (:func:`connected_components`) needs
-    O(diameter).
-
-    Built for CHAIN-SHAPED duplicate graphs: perceptual-hash dup edges
-    (x_media_dedup_e2e) link A≈B≈C≈… chains of gradually-drifting
-    copies — measured diameter 23 on the sf0.1 aHash graph, which cost
-    the plain variant 24 rounds (~15 s of pure round overhead) vs 6
-    rounds here. Same contract and the same unique fixpoint as the plain
-    variant (labels are monotone non-increasing, always a reachable
-    node id, and stable only when neighbour- and pointer-stable — the
-    component minimum); property-tested against driver-side union-find
-    alongside the star variant.
-
-    Scale: one extra self-join of the (id, label) frame per round —
-    label-keyed equi-join, uniform keys. The round COUNT is the win: at
-    100 TB a 24-round lineage of shuffles is 4× the wall-clock of 6.
-    The convergence signal rides the label frame as a flag column, so
-    each round is exactly one checkpoint job + one leaf count."""
-    sym = (
-        edges.select("src", "dst")
-        .unionAll(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .localCheckpoint()
-    )
-    labels = nodes.select(F.col("id"), F.col("id").alias("component")).localCheckpoint()
-    if max_iter is None:
-        max_iter = max(8, labels.count())  # runaway backstop, never early-stop
-    changed = -1
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min("component").alias("nbr_min"))
-        )
-        ptr = labels.select(
-            F.col("id").alias("pid"), F.col("component").alias("pcomp")
-        )
-        new_labels = (
-            labels.join(nbr, "id", "left")
-            .join(ptr, F.col("component") == F.col("pid"), "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"),
-                    F.coalesce("nbr_min", F.col("component")),
-                    F.coalesce("pcomp", F.col("component")),
-                ).alias("component"),
-                (
-                    F.least(
-                        F.col("component"),
-                        F.coalesce("nbr_min", F.col("component")),
-                        F.coalesce("pcomp", F.col("component")),
-                    )
-                    < F.col("component")
-                ).alias("moved"),
-            )
-            .localCheckpoint()  # eager: one materialization job per round
-        )
-        changed = new_labels.where(F.col("moved")).count()  # leaf-plan count
-        labels = new_labels.drop("moved")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components_hashmin did not converge in {max_iter} "
-            f"rounds ({changed} labels still moving); raise max_iter"
-        )
-    return labels
-
-
-def _canon(edges: DataFrame) -> DataFrame:
-    """Canonical undirected edge set: (least, greatest), self-loops dropped,
-    deduped — the normal form both star steps and the convergence compare use."""
-    return (
-        edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-
-
-def _symmetrize(edges: DataFrame) -> DataFrame:
-    return edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionAll(
-        edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-    )
-
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Large-star: every node links its strictly-larger neighbours to the
-    minimum of its closed neighbourhood."""
-    sym = _symmetrize(edges)
-    mins = (
-        sym.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", F.col("u")).alias("m"))
-    )
-    return _canon(
-        sym.join(mins, "u")
-        .where(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Small-star: every node links its ≤-neighbours (and itself) to the
-    minimum of that closed ≤-neighbourhood."""
-    sym = _symmetrize(edges)
-    le = sym.where(F.col("v") <= F.col("u"))
-    mins = (
-        le.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select("u", F.least("mn", F.col("u")).alias("m"))
-    )
-    via_nbr = (
-        le.join(mins, "u")
-        .where(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("src"), F.col("m").alias("dst"))
-    )
-    via_self = mins.where(F.col("u") != F.col("m")).select(
-        F.col("u").alias("src"), F.col("m").alias("dst")
-    )
-    return _canon(via_nbr.unionAll(via_self))
-
-
-def connected_components_star(
-    edges: DataFrame,
-    nodes: DataFrame,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Connected components via alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the O(log n)-round scale path for graphs whose diameter is NOT small
-    (min-label propagation needs O(diameter) rounds; a chain of repost
-    edges or a crawl graph can be arbitrarily deep).
-
-    Same contract as :func:`connected_components`; each round is two
-    groupBy-min + join steps over the current edge set, converging when
-    the canonical edge set reaches its star-forest fixpoint; still moving
-    after ``max_iter`` rounds is a ``RuntimeError``, as in both siblings.
-    Property tests prove both variants agree with driver-side union-find."""
-    e = _canon(edges).localCheckpoint()
-    diff = -1
-    for _ in range(max_iter):
-        e2 = _small_star(_large_star(e)).localCheckpoint()
-        diff = e2.exceptAll(e).count() + e.exceptAll(e2).count()
-        e = e2
-        if diff == 0:
-            break
-    if diff != 0:
-        # a non-fixpoint edge set is not a star forest: its labels would
-        # split components silently
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            f"rounds ({diff} edges still changing); raise max_iter"
-        )
-    # fixpoint edges form stars: every member's min closed-neighbour IS the
-    # root (roots are their own minimum)
-    lbl = (
-        _symmetrize(e)
-        .groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select(F.col("u").alias("id"), F.least("mn", F.col("u")).alias("component"))
-    )
-    return (
-        nodes.select("id")
-        .join(lbl, "id", "left")
-        .select("id", F.coalesce("component", F.col("id")).alias("component"))
-    )
 
 
 @query(
@@ -495,20 +312,18 @@ def x_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def cluster_safe_split_core(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """The pair-source-parameterized split + audit: components over the
-    given ``(src, dst)`` near-dup pairs (via
-    :func:`connected_components_star` — O(log n) rounds even for
-    chain-shaped clusters, matching the scale contract this docstring
-    advertises; ADVICE r9 flagged the earlier min-label call as
-    O(diameter)), split hashed on cluster_id (80/10/10), per-split
-    stats, and the COMPUTED cross-split leakage count over the same
-    pairs. ``x_cluster_safe_split`` feeds the SQL-expressible
-    ground-truth pair join (so DuckDB can verify); the 100 TB path
-    feeds :func:`..dedup.jaccard_join_pairs` (PPJoin, lossless at the
-    same τ=0.8 — pytest proves both sources yield the IDENTICAL split)
-    or a MinHash-LSH candidate stream."""
+    given ``(src, dst)`` near-dup pairs (:func:`connected_components`,
+    O(log diameter) rounds even for chain-shaped clusters), split hashed
+    on cluster_id (80/10/10), per-split stats, and the COMPUTED
+    cross-split leakage count over the same pairs.
+    ``x_cluster_safe_split`` feeds the SQL-expressible ground-truth pair
+    join (so DuckDB can verify); the 100 TB path feeds
+    :func:`..dedup.jaccard_join_pairs` (PPJoin, lossless at the same
+    τ=0.8 — pytest proves both sources yield the IDENTICAL split) or a
+    MinHash-LSH candidate stream."""
     from .strata import split_bucket
 
-    comp = connected_components_star(
+    comp = connected_components(
         pairs, docs.select(F.col("doc_id").alias("id"))
     ).select(F.col("id").alias("doc_id"), F.col("component").alias("cluster_id"))
     bucket = split_bucket(F.col("cluster_id"))
@@ -611,7 +426,7 @@ def x_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment breaks the hash, not just an assertion.
 
     Scale: cluster assignment is one map-side md5 over the components
-    output (itself the certified star-contraction loop); the audit join
+    output (itself the certified hash-to-min loop); the audit join
     streams the pair list against the broadcast-size split table. This
     registered face feeds the SQL-expressible ground-truth pair join so
     DuckDB can verify; the scale path is the SAME
@@ -673,20 +488,18 @@ def x_entity_resolution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nationkey, name length ± 1), the length shift IN the shuffle key,
     never a post-filter inside a 25-block nation join; VERDICT r9 #2) →
     match (edit distance ≤ 2) → transitive clustering
-    (:func:`connected_components_star`, the O(log n)-round
-    large-star/small-star loop — the fixture's sequential names chain
-    aggressively, exactly the long-diameter case min-label propagation
-    would pay O(diameter) driver-sequential rounds for; ADVICE r9) →
-    survivorship (golden record = highest account balance, key
-    tiebreak). Emits the golden-record ledger for every multi-record
-    entity.
+    (:func:`connected_components` — the fixture's sequential names chain
+    aggressively, and the pointer jump keeps that long-diameter case at
+    O(log diameter) rounds) → survivorship (golden record = highest
+    account balance, key tiebreak). Emits the golden-record ledger for
+    every multi-record entity.
 
     Scale: every match-join branch is a plain hash join keyed on
     (nation, length), so block fan-out is n_{nation,len}, not n_nation;
-    star contraction converges in O(log n) rounds regardless of chain
-    length; survivorship is one window over the clustered dimension.
-    The quadratic piece exists only in the oracle's ground-truth
-    closure (sf-gated)."""
+    the matched pair list is materialised once and every components
+    round scans it; survivorship is one window over the clustered
+    dimension. The quadratic piece exists only in the oracle's
+    ground-truth closure (sf-gated)."""
     from .blocking import blocked_pairs
 
     cust = tables(spark, sf_dir)["customer"]
@@ -702,7 +515,7 @@ def x_entity_resolution_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = cand.where(
         F.levenshtein(F.col("a_c_name"), F.col("b_c_name")) <= 2
     ).select(F.col("a_c_custkey").alias("src"), F.col("b_c_custkey").alias("dst"))
-    comp = connected_components_star(
+    comp = connected_components(
         pairs, cust.select(F.col("c_custkey").alias("id"))
     ).select(F.col("id").alias("c_custkey"), F.col("component").alias("cluster_id"))
     from pyspark.sql import Window
@@ -742,7 +555,8 @@ def strongly_connected_components(
     as DataFrame joins — no driver-side graph state.
 
     ``edges`` needs columns (src, dst), self-loop-free. Returns
-    (v, scc_id) where scc_id = min member id — covering every endpoint.
+    (v, scc_id) where scc_id = min member id — covering every endpoint —
+    eagerly materialised inside the loop's shuffle-width scope.
 
     Per outer round:
     1. TRIM to fixpoint: a node with no in-edges or no out-edges within
@@ -968,8 +782,9 @@ def strongly_connected_components(
                 f"rounds ({n_rem} nodes unassigned); deep condensation DAG — "
                 "raise max_rounds"
             )
-    assert assigned is not None
-    return assigned
+        assert assigned is not None
+        # eager, inside the scope: the lazy leaves above build at loop width
+        return assigned.localCheckpoint()
 
 
 #: Deterministic sampling of the purchased-after graph: keeping only
@@ -994,9 +809,9 @@ _SCC_ASSIGN_MEMO: dict[tuple[str, str], DataFrame] = {}
 
 def cached_scc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(v, scc_id) for the mod-``_SCC_MOD`` purchased-after sample graph,
-    computed once per (SparkSession, sf_dir) and eagerly localCheckpoint-ed
-    (the multi-consumer rule: the frame feeds the size histogram AND both
-    condensation endpoint joins)."""
+    computed once per (SparkSession, sf_dir). The frame feeds the size
+    histogram AND both condensation endpoint joins, and
+    :func:`strongly_connected_components` returns it materialised."""
     import os
 
     from ..memo import session_memo
@@ -1005,9 +820,7 @@ def cached_scc_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SCC_ASSIGN_MEMO,
         spark,
         (os.path.normpath(sf_dir),),
-        lambda: strongly_connected_components(
-            _scc_sample_edges(spark, sf_dir)
-        ).localCheckpoint(),
+        lambda: strongly_connected_components(_scc_sample_edges(spark, sf_dir)),
     )
 
 
@@ -1077,8 +890,8 @@ def x_graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     _SCC_MOD). Output: SCC size histogram with a sum-of-min-ids checksum —
     the full component partition, order-independently fingerprinted.
 
-    The directed face the component family lacked: connected_components /
-    star-contraction answer undirected reachability; mutual reachability
+    The directed face the component family lacked: connected_components
+    answers undirected reachability; mutual reachability
     is what cycle-detection, dependency-audit, and dedup-of-reference-
     loops questions need. Oracle: full recursive transitive closure +
     mutual-reach join — quadratic, affordable only on the sampled
@@ -1197,6 +1010,16 @@ def x_scc_condensation(spark: SparkSession, sf_dir: str) -> DataFrame:
 x_scc_condensation.__doc__ = x_scc_condensation.__doc__.format(m=_SCC_MOD)
 
 
+_LEVELS_SCHEMA = StructType(
+    [
+        StructField("level", IntegerType()),
+        StructField("n_sccs", LongType()),
+        StructField("n_members", LongType()),
+        StructField("sccs_xor", LongType()),
+    ]
+)
+
+
 def condensation_levels(edges: DataFrame, scc: DataFrame | None = None) -> DataFrame:
     """SCC-condensation topological layering of a directed edge list —
     the engine core behind x_scc_condensation (see its docstring for
@@ -1207,10 +1030,8 @@ def condensation_levels(edges: DataFrame, scc: DataFrame | None = None) -> DataF
     session-memoized one so the pair of SCC queries runs the coloring
     pass once per sweep); when omitted the pass runs here."""
     e = edges.select("src", "dst").localCheckpoint(eager=False)
-    # eager: the assignment feeds the member counts AND both endpoint
-    # joins (the multi-consumer rule — see the KMV checkpoint note)
     if scc is None:
-        scc = strongly_connected_components(e).localCheckpoint()
+        scc = strongly_connected_components(e)
     members = (
         scc.groupBy("scc_id")
         .agg(F.count("*").alias("n_members"))
@@ -1290,6 +1111,4 @@ def condensation_levels(edges: DataFrame, scc: DataFrame | None = None) -> DataF
                 remaining.select(F.col("scc_id").alias("a")), "a", "left_semi"
             ).localCheckpoint(eager=False)
             lvl += 1
-    return spark.createDataFrame(
-        rows, "level int, n_sccs long, n_members long, sccs_xor long"
-    )
+    return sinks.rows_frame(spark, rows, _LEVELS_SCHEMA)

@@ -913,8 +913,8 @@ def x_media_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the only per-byte work is the one decode+hash pass; pairing
     is the banded equi-join (collision-bounded, never images²), the
-    closure is star-contraction join rounds over DUP EDGES ONLY (dup
-    density, not corpus size), and the election is one groupBy. The
+    closure is hash-to-min join rounds over DUP EDGES ONLY (dup density,
+    not corpus size), and the election is one groupBy. The
     oracle replays the identical chain — hash bits, banding, threshold,
     recursive closure, election — from the ASCII payloads.
 
@@ -930,14 +930,12 @@ def x_media_dedup_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Node list = the memoized hash frame's ids (identical gate — see
     # cached_ahash_frame), so the steady-state run re-scans nothing.
     imgs = cached_ahash_frame(spark, sf_dir).select(F.col("doc_id").alias("id"))
-    # Hash-to-min closure, NOT plain min-label propagation: aHash dup
-    # edges chain drifting copies (A≈B≈C… with A,C sharing no band), and
-    # the measured sf0.1 dup graph has diameter 23 — 24 propagation
-    # rounds (~15 s of round overhead) vs 6 with pointer doubling, and
-    # the gap widens with scale (chains lengthen as corpora grow).
-    from ..functions.graph import connected_components_hashmin
+    # aHash dup edges chain drifting copies (A≈B≈C… with A,C sharing no
+    # band; diameter 23 on the sf0.1 graph): the components' pointer jump
+    # closes such a chain in O(log diameter) rounds.
+    from ..functions.graph import connected_components
 
-    comp = connected_components_hashmin(pairs, imgs)
+    comp = connected_components(pairs, imgs)
     sized = comp.groupBy("component").agg(
         F.count("*").alias("cluster_size"),
         F.min("id").alias("keeper"),

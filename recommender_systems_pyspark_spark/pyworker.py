@@ -24,6 +24,12 @@ mtime tick, which the jar and zips Spark ships never see while a worker
 runs. The daemon invalidates once before it forks, so every worker starts
 with the keys of the archives it inherits.
 
+On every Python version the daemon also silences one pandas warning that
+its workers would print on every stateful micro-batch: pandas 2.2 deprecates
+concatenating all-NA frames, which ``applyInPandasWithState``'s serializer
+does when it pads typed state frames. The padding is Spark's, the result is
+unaffected, and no other warning is touched.
+
 The driver never runs this module; importing it changes nothing.
 """
 
@@ -33,6 +39,7 @@ import importlib
 import os
 import runpy
 import sys
+import warnings
 import zipimport
 
 _stock_invalidate = zipimport.zipimporter.invalidate_caches
@@ -59,6 +66,12 @@ def invalidate_if_changed(self: zipimport.zipimporter) -> None:
 
 
 if __name__ == "__main__":
+    warnings.filterwarnings(
+        "ignore",
+        message="The behavior of DataFrame concatenation with empty or all-NA entries",
+        category=FutureWarning,
+        module=r"pyspark\.sql\.pandas\.serializers",
+    )
     if sys.version_info < (3, 12):
         zipimport.zipimporter.invalidate_caches = invalidate_if_changed
         importlib.invalidate_caches()

@@ -156,8 +156,7 @@ def scoped_conf(spark: SparkSession, confs: Mapping[str, str]) -> Iterator[None]
     """Set ``confs`` for the body of a ``with`` block, then put every key
     back as it was: its prior value, or unset if it had none. This is the
     engine's only set-then-restore path; the only permanent sets are
-    :func:`tune_session`, the loader's ``nanosAsLong`` and
-    ``streaming.engine.use_rocksdb_state``.
+    :func:`tune_session` and the loader's ``nanosAsLong``.
 
     A lazy frame built inside the scope but evaluated after it runs under
     the RESTORED confs (and after any temp dir opened alongside is gone),

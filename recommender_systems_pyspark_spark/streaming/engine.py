@@ -60,12 +60,6 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def use_rocksdb_state(spark: SparkSession) -> None:
-    """Switch stateful streaming to the RocksDB state store (bundled with
-    Spark 4 — no extra jars). Applies to queries STARTED after this call."""
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-
-
 def read_kafka_stream(
     spark: SparkSession,
     bootstrap_servers: str,

@@ -11,8 +11,9 @@ forward:
 - Timers (processing/event time) registered per key — eviction and
   session-close emission without the timeout-conf side channel.
 - RocksDB state store is REQUIRED (the provider contract), which is the
-  production answer to state larger than executor heap anyway; engine.
-  use_rocksdb_state pins the same provider for the classic path.
+  production answer to state larger than executor heap anyway; the
+  classic path takes the same provider (``engine.ROCKSDB_PROVIDER``) when
+  a caller scopes it in with ``session.scoped_conf``.
 
 The operator mirrors stateful.py: per-user running engagement totals
 (count, value sum, last event time) carried across micro-batches, with an
@@ -106,8 +107,9 @@ def _lazy_processor():
 
 def cumulative_user_stats_v2(events: DataFrame) -> DataFrame:
     """Attach the transformWithState operator to an events stream. The
-    session must run the RocksDB state store provider (engine.
-    use_rocksdb_state) — the API's contract, not an optimization here."""
+    session must run the RocksDB state store provider
+    (``engine.ROCKSDB_PROVIDER``, set with ``session.scoped_conf``) — the
+    API's contract, not an optimization here."""
     return events.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=_lazy_processor(),
         outputStructType=OUTPUT_SCHEMA,

@@ -12,9 +12,9 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _union_find(n_nodes: int, edges: list[tuple[int, int]]) -> dict[int, int]:
+def _union_find(nodes, edges: list[tuple[int, int]]) -> dict[int, int]:
     """Ground-truth components: plain driver-side union-find, min-id label."""
-    parent = list(range(n_nodes))
+    parent = {v: v for v in nodes}
 
     def find(x: int) -> int:
         while parent[x] != x:
@@ -26,39 +26,72 @@ def _union_find(n_nodes: int, edges: list[tuple[int, int]]) -> dict[int, int]:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    return {i: find(i) for i in range(n_nodes)}
+    return {v: find(v) for v in parent}
 
 
-def test_connected_components_matches_union_find(spark):
+def _random_graphs() -> tuple[int, list[tuple[int, int]]]:
+    """Four random graphs (seed, nodes, edge draws; self-loops dropped) as
+    one disjoint union — each graph's ids shifted past the previous one's
+    — so a single components run checks all of them."""
+    base, edges = 0, []
+    for seed, n, m in ((42, 200, 150), (7, 120, 80), (11, 120, 200), (13, 60, 30)):
+        rng = random.Random(seed)
+        draws = ((rng.randrange(n), rng.randrange(n)) for _ in range(m))
+        edges += [(base + a, base + b) for a, b in draws if a != b]
+        base += n
+    return base, edges
+
+
+def _chain(n: int) -> tuple[int, list[tuple[int, int]]]:
+    """A path graph: diameter n-1, the worst case for label propagation."""
+    return n, [(i, i + 1) for i in range(n - 1)]
+
+
+@pytest.mark.parametrize(
+    "graph, max_iter, converges",
+    [
+        pytest.param(_random_graphs(), None, True, id="random"),
+        pytest.param(_chain(30), 30, True, id="chain30"),
+        pytest.param(_chain(60), 20, True, id="chain60"),
+        pytest.param(_chain(60), 1, False, id="chain60-max_iter1"),
+    ],
+)
+def test_connected_components_matches_union_find(spark, graph, max_iter, converges):
+    """Hash-to-min agrees with driver-side union-find on random graphs and
+    labels a deep chain 0 within ``max_iter`` rounds; a run still moving
+    after ``max_iter`` rounds raises instead of splitting a component."""
     from recommender_systems_pyspark_spark.functions.graph import connected_components
 
-    rng = random.Random(42)
-    n = 200
-    edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(150)]
-    edges = [(a, b) for a, b in edges if a != b]
-
+    n, edges = graph
     edges_df = spark.createDataFrame(edges, "src long, dst long")
-    nodes_df = spark.range(n).select(F.col("id"))
-    got = {
-        r.id: r.component for r in connected_components(edges_df, nodes_df).collect()
-    }
-    assert got == _union_find(n, edges)
+    if not converges:
+        with pytest.raises(RuntimeError, match=f"did not converge in {max_iter} rounds"):
+            connected_components(edges_df, spark.range(n), max_iter)
+        return
+    comp = connected_components(edges_df, spark.range(n), max_iter).collect()
+    assert {r.id: r.component for r in comp} == _union_find(range(n), edges)
 
 
-def test_connected_components_long_chain(spark):
-    """A 30-node path graph has diameter 29 — the worst case for min-label
-    propagation; the loop must still converge (within max_iter) to one
-    component labelled 0."""
+def test_edges_are_evaluated_once(spark):
+    """The edge plan runs once, however many rounds follow and though every
+    round reads it in both directions: a counting UDF in it sees each of
+    the n edge rows once, not once per direction."""
+    from pyspark.sql.types import LongType
+
     from recommender_systems_pyspark_spark.functions.graph import connected_components
 
-    n = 30
-    edges_df = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-    )
-    nodes_df = spark.range(n).select(F.col("id"))
-    got = connected_components(edges_df, nodes_df, max_iter=n).collect()
-    assert {r.component for r in got} == {0}
-    assert len(got) == n
+    n = 12
+    seen = spark.sparkContext.accumulator(0)
+
+    def counted(x):
+        seen.add(1)
+        return x
+
+    src = F.udf(counted, LongType()).asNondeterministic()
+    edges = spark.range(n).select(src("id").alias("src"), (F.col("id") + 1).alias("dst"))
+    comp = connected_components(edges, spark.range(n + 1))
+    assert {r.component for r in comp.collect()} == {0}
+    assert seen.value == n
 
 
 def test_cluster_keep_partitions_corpus(spark, sf_dir):
@@ -232,45 +265,6 @@ def test_unigram_score_orders_common_vs_rare(spark):
     assert rows[1].bucket == "head" and rows[2].bucket == "tail"
 
 
-def test_star_components_match_union_find(spark):
-    """Large-star/small-star must agree with union-find on random graphs
-    and on the deep-chain worst case (where it needs O(log n) rounds, not
-    O(n))."""
-    from recommender_systems_pyspark_spark.functions.graph import (
-        connected_components_star,
-    )
-
-    for seed, n, m in ((7, 120, 80), (11, 120, 200), (13, 60, 30)):
-        rng = random.Random(seed)
-        edges = [
-            (a, b)
-            for a, b in ((rng.randrange(n), rng.randrange(n)) for _ in range(m))
-            if a != b
-        ]
-        got = {
-            r.id: r.component
-            for r in connected_components_star(
-                spark.createDataFrame(edges, "src long, dst long"),
-                spark.range(n).select(F.col("id")),
-            ).collect()
-        }
-        assert got == _union_find(n, edges), f"seed={seed}"
-
-    # chain: diameter 59 must converge well inside max_iter=20 star rounds,
-    # and one round is too few: unconverged labels must raise, not split it
-    n = 60
-    chain = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "src long, dst long")
-    got = {
-        r.id: r.component
-        for r in connected_components_star(
-            chain, spark.range(n).select(F.col("id")), max_iter=20
-        ).collect()
-    }
-    assert set(got.values()) == {0}
-    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
-        connected_components_star(chain, spark.range(n).select(F.col("id")), max_iter=1)
-
-
 def test_mixture_interleave_upsamples_small_sources(spark, sf_dir):
     """Reading in mix_key order, a source's share of any prefix tracks
     sqrt(n_source) ratios — small sources appear more often than their raw
@@ -425,43 +419,3 @@ def test_bfs_delta_frontier_joins_only_new_nodes(spark, sf_dir):
     # accumulated reached set the r6 shape re-expanded
     reached_before_last = n_seeds + sum(trace[:-1])
     assert trace[-1] < reached_before_last
-
-
-def test_hashmin_components_match_union_find(spark):
-    """Hash-to-min (pointer-doubling min-label, x_media_dedup_e2e's
-    closure) must agree with union-find on random graphs and on the
-    deep-chain worst case it exists for (O(log d) rounds, not O(d))."""
-    from recommender_systems_pyspark_spark.functions.graph import (
-        connected_components_hashmin,
-    )
-
-    for seed, n, m in ((7, 120, 80), (11, 120, 200), (13, 60, 30)):
-        rng = random.Random(seed)
-        edges = [
-            (a, b)
-            for a, b in ((rng.randrange(n), rng.randrange(n)) for _ in range(m))
-            if a != b
-        ]
-        got = {
-            r.id: r.component
-            for r in connected_components_hashmin(
-                spark.createDataFrame(edges, "src long, dst long"),
-                spark.range(n).select(F.col("id")),
-            ).collect()
-        }
-        assert got == _union_find(n, edges), f"seed={seed}"
-
-    # chain: diameter 59 must converge well inside 20 rounds (pointer
-    # doubling halves label-chain depth per round)
-    n = 60
-    got = {
-        r.id: r.component
-        for r in connected_components_hashmin(
-            spark.createDataFrame(
-                [(i, i + 1) for i in range(n - 1)], "src long, dst long"
-            ),
-            spark.range(n).select(F.col("id")),
-            max_iter=20,
-        ).collect()
-    }
-    assert got == {i: 0 for i in range(n)}

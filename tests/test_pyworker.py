@@ -124,6 +124,32 @@ def test_worker_task_rereads_no_archive(spark):
     assert [r.reads for r in rows] == [0] * len(rows), rows
 
 
+def test_worker_ignores_pandas_all_na_concat_warning(spark):
+    """The FutureWarning pandas 2.2 raises when pyspark's Arrow serializer
+    pads ``applyInPandasWithState`` frames with all-NA rows is filtered in
+    the workers: issued from ``pyspark.sql.pandas.serializers`` inside a
+    task, it is not even recorded."""
+    import pandas as pd
+
+    def warn(batches):
+        import warnings
+
+        with warnings.catch_warnings(record=True) as seen:
+            warnings.warn_explicit(
+                "The behavior of DataFrame concatenation with empty or all-NA "
+                "entries is deprecated.",
+                FutureWarning,
+                "serializers.py",
+                1,
+                module="pyspark.sql.pandas.serializers",
+            )
+        for _ in batches:
+            yield pd.DataFrame({"recorded": [len(seen)]})
+
+    rows = spark.range(1).mapInPandas(warn, "recorded int").collect()
+    assert [r.recorded for r in rows] == [0]
+
+
 _OTHER_CWD_SCRIPT = """
 import sys
 sys.path.insert(0, {root!r})

@@ -72,20 +72,17 @@ def test_blocked_pairs_carries_both_sides_columns(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# ER clustering: star components agree with min-label on the real pair graph
+# ER clustering: components agree with union-find on the real pair graph
 # ---------------------------------------------------------------------------
 
 
-def test_entity_resolution_star_equals_min_label(spark, sf_dir):
-    """x_entity_resolution_e2e now clusters with connected_components_star
-    (O(log n) rounds); its components must be identical to the min-label
-    path on the actual blocked-match pair graph — same ids, same
-    min-id labels (the fixture's chaining names are exactly the
-    long-diameter case the switch is for)."""
-    from recommender_systems_pyspark_spark.functions.graph import (
-        connected_components,
-        connected_components_star,
-    )
+def test_entity_resolution_components_match_union_find(spark, sf_dir):
+    """x_entity_resolution_e2e's components over the actual blocked-match
+    pair graph equal driver-side union-find over the collected pairs —
+    same ids, same min-id labels (the fixture's chaining names are the
+    long-diameter case)."""
+    from recommender_systems_pyspark_spark.functions.graph import connected_components
+    from tests.test_graph_corpus import _union_find
 
     cust = tables(spark, sf_dir)["customer"]
     cand = blocked_pairs(
@@ -101,9 +98,12 @@ def test_entity_resolution_star_equals_min_label(spark, sf_dir):
         F.levenshtein(F.col("a_c_name"), F.col("b_c_name")) <= 2
     ).select(F.col("a_c_custkey").alias("src"), F.col("b_c_custkey").alias("dst"))
     nodes = cust.select(F.col("c_custkey").alias("id"))
-    star = {(r.id, r.component) for r in connected_components_star(pairs, nodes).collect()}
-    minl = {(r.id, r.component) for r in connected_components(pairs, nodes).collect()}
-    assert star == minl
+    got = {r.id: r.component for r in connected_components(pairs, nodes).collect()}
+    want = _union_find(
+        [r.id for r in nodes.collect()], [(r.src, r.dst) for r in pairs.collect()]
+    )
+    assert got == want
+    assert any(v != k for k, v in got.items())  # the graph has real clusters
 
 
 # ---------------------------------------------------------------------------
@@ -498,16 +498,16 @@ def test_passjoin_ed1_equals_naive(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_s15_both_close_paths_and_horizon(spark, sf_dir):
+def test_s15_both_close_paths_and_horizon(spark, sf_dir, tmp_path):
     """The stream must exercise BOTH close paths (successor arrival and
     watermark timeout), emit each closed session exactly once with the
     batch gap-split's exact contents, and hold back every session whose
     expiry the final watermark has not passed."""
     import os
-    import tempfile
 
     from pyspark.sql import Window
 
+    from recommender_systems_pyspark_spark.session import scoped_conf
     from recommender_systems_pyspark_spark.sources import load_table
     from recommender_systems_pyspark_spark.streaming.session_timeout import (
         _DELAY_MIN,
@@ -519,10 +519,8 @@ def test_s15_both_close_paths_and_horizon(spark, sf_dir):
         stage_ordered_files,
     )
 
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        d = tempfile.mkdtemp(prefix="s15_test_")
+    with scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"}):
+        d = str(tmp_path)
         feed = load_table(spark, sf_dir, "events").select(
             "event_id", "user_id", "ts"
         )
@@ -590,5 +588,3 @@ def test_s15_both_close_paths_and_horizon(spark, sf_dir):
             assert not (
                 en.replace(microsecond=en.microsecond // 1000 * 1000) + gap < wm
             ), (en, wm)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)

@@ -364,6 +364,7 @@ def test_s16_chained_agg_restart_recovery(spark, sf_dir, tmp_path):
     from pyspark.sql import functions as F
 
     from recommender_systems_pyspark_spark.registry import all_queries
+    from recommender_systems_pyspark_spark.session import scoped_conf
     from recommender_systems_pyspark_spark.sources import load_table
     from recommender_systems_pyspark_spark.streaming.chained_rollup import (
         _N_BATCHES,
@@ -374,9 +375,7 @@ def test_s16_chained_agg_restart_recovery(spark, sf_dir, tmp_path):
         state_sized_partitions,
     )
 
-    prior_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
+    with scoped_conf(spark, {"spark.sql.session.timeZone": "UTC"}):
         staged = str(tmp_path / "staged")
         src = str(tmp_path / "src")
         out = str(tmp_path / "out")
@@ -443,8 +442,6 @@ def test_s16_chained_agg_restart_recovery(spark, sf_dir, tmp_path):
             .collect()
         )
         assert got == want
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prior_tz)
 
 
 def test_quarantine_split_is_projection_independent(spark, tmp_path):

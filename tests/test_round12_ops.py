@@ -875,18 +875,20 @@ def test_condensation_levels_chain_of_cycles(spark):
 
 def test_condensation_levels_diamond_longest_path(spark):
     """Diamond 1→2→4, 1→3, 3→5→4 (all singleton SCCs): the layering is
-    LONGEST-path — node 4 sits at level 3 (via 3→5→4), not level 2."""
+    LONGEST-path — node 4 sits at level 3 (via 3→5→4), not level 2. The
+    level rows come back as a local table, not a parallelized RDD that a
+    Python worker converts."""
     from recommender_systems_pyspark_spark.functions.graph import (
         condensation_levels,
     )
 
     edges = [(1, 2), (2, 4), (1, 3), (3, 5), (5, 4)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r.level: (r.n_sccs, r.sccs_xor)
-        for r in condensation_levels(df).collect()
-    }
+    levels = condensation_levels(df)
+    got = {r.level: (r.n_sccs, r.sccs_xor) for r in levels.collect()}
     assert got == {0: (1, 1), 1: (2, 2 ^ 3), 2: (1, 5), 3: (1, 4)}
+    plan = levels._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_condensation_fixture_partitions_the_scc_set(spark):

@@ -319,7 +319,8 @@ def test_assortativity_moment_identities(spark):
 def test_media_dedup_histogram_matches_union_find(spark):
     """Replay the clustering with a driver-side union-find over the SAME
     thresholded pair set and compare the histogram — proves the
-    distributed star-contraction computes the true transitive closure."""
+    distributed hash-to-min components compute the true transitive
+    closure."""
     from recommender_systems_pyspark_spark.multimodal.media import (
         _MEDIA_DEDUP_HAM,
         ahash_scored_pairs,

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import pytest
 
+from recommender_systems_pyspark_spark.session import scoped_conf
 from recommender_systems_pyspark_spark.streaming.engine import (
     read_event_stream,
     start_to_memory,
@@ -70,9 +71,7 @@ def test_transform_with_state_carries_across_batches(spark, stream_dir):  # noqa
         cumulative_user_stats_v2,
     )
 
-    prior = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
-    try:
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
         stream = cumulative_user_stats_v2(read_event_stream(spark, stream_dir))
         _write_batch(
             stream_dir,
@@ -94,14 +93,11 @@ def test_transform_with_state_carries_across_batches(spark, stream_dir):  # noqa
             rows = spark.sql("SELECT * FROM tws_totals").collect()
         finally:
             q.stop()
-        snaps = {(r.user_id, r.n_events): r for r in rows}
-        assert snaps[(1, 2)].total_value == pytest.approx(110.0)
-        assert snaps[(1, 2)].alerts_crossed == 1
-        assert snaps[(1, 3)].total_value == pytest.approx(210.0)
-        assert snaps[(1, 3)].alerts_crossed == 1
-    finally:
-        if prior:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prior)
+    snaps = {(r.user_id, r.n_events): r for r in rows}
+    assert snaps[(1, 2)].total_value == pytest.approx(110.0)
+    assert snaps[(1, 2)].alerts_crossed == 1
+    assert snaps[(1, 3)].total_value == pytest.approx(210.0)
+    assert snaps[(1, 3)].alerts_crossed == 1
 
 
 def test_stateful_v2_registration_is_conditional_on_protobuf():

@@ -154,13 +154,11 @@ def test_stateful_stream_on_rocksdb_state_store(spark, tmp_path):
         ROCKSDB_PROVIDER,
         read_event_stream,
         start_to_memory,
-        use_rocksdb_state,
         windowed_counts,
     )
+    from recommender_systems_pyspark_spark.session import scoped_conf
 
-    old = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    use_rocksdb_state(spark)
-    try:
+    with scoped_conf(spark, {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}):
         src = tmp_path / "stream_src"
         src.mkdir()
         events = [
@@ -190,11 +188,6 @@ def test_stateful_stream_on_rocksdb_state_store(spark, tmp_path):
             )
         finally:
             q.stop()
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", old)
 
 
 def test_streaming_parquet_sink_appends_finalized_windows(spark, tmp_path):

@@ -6,9 +6,13 @@ Usage:
 Runs each named registered query in ONE fresh engine session with the
 bench's reclaim between passes: cold pass first (parquet footers, codegen,
 shared-memo builds), then the steady-state pass. Prints one JSON line
-{"query": {"cold": s, "warm": s}, ...} — directly comparable to bench.py's
-queries_cold / queries maps. The noop sink forces full computation of
-every column with no driver collect (guide §1.4).
+{"query": {"cold": s, "warm": s, "cpu_s": s, "jobs": n}, ...}: cold/warm
+are wall seconds, directly comparable to bench.py's queries_cold / queries
+maps; cpu_s and jobs describe the warm pass. cpu_s is the CPU the whole
+process tree used (driver, JVM, Python workers), which follows the work
+done where wall time follows host load; jobs is the number of Spark jobs
+the pass ran. The noop sink forces full computation of every column with
+no driver collect (guide §1.4).
 """
 
 from __future__ import annotations
@@ -27,31 +31,40 @@ def main() -> None:
     if args and os.path.isdir(args[0]):
         sf_dir, args = args[0], args[1:]
     from bench import reclaim
+    from perfbench.telemetry import tree_cpu_s
     from recommender_systems_pyspark_spark.registry import all_queries
     from recommender_systems_pyspark_spark.session import get_spark
 
     spark = get_spark("spark-graft-measure")
-    spark.sparkContext.setLogLevel("ERROR")
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
     specs = all_queries()
 
-    def run(name: str) -> float:
-        spark.sparkContext.setJobDescription(name)
-        t0 = time.perf_counter()
+    def run(name: str, group: str) -> dict[str, float]:
+        sc.setJobGroup(group, name)
+        cpu0, t0 = tree_cpu_s(), time.perf_counter()
         specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark.sparkContext.setJobDescription(None)
-        return round(dt, 3)
+        wall, cpu = time.perf_counter() - t0, tree_cpu_s() - cpu0
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        return {"wall": round(wall, 3), "cpu_s": round(cpu, 2), "jobs": jobs}
 
     # identical warmup to bench.py so cold rows mean the same thing
-    run("tpch_q6")
+    run("tpch_q6", "warmup")
     out: dict[str, dict[str, float]] = {}
     for name in args:
         reclaim(spark)
-        cold = run(name)
+        cold = run(name, f"{name}:cold")
         reclaim(spark)
-        warm = run(name)
-        out[name] = {"cold": cold, "warm": warm}
-        print(f"# {name}: cold {cold} warm {warm}", file=sys.stderr)
+        warm = run(name, f"{name}:warm")
+        out[name] = {
+            "cold": cold["wall"],
+            "warm": warm["wall"],
+            "cpu_s": warm["cpu_s"],
+            "jobs": warm["jobs"],
+        }
+        print(f"# {name}: {out[name]}", file=sys.stderr)
     print(json.dumps(out))
     spark.stop()
 
