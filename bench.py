@@ -38,7 +38,9 @@ Janino compiles for classes that an earlier entry already compiled in
 this JVM; cold rows recorded with Spark's 100-entry cache (r15 and
 earlier) are not directly comparable to later ones. The detail sidecar
 records each run's compile count (a ``CodegenMetrics`` delta around the
-run) under ``codegen_compiles`` and ``codegen_compiles_cold``.
+run) under ``codegen_compiles`` and ``codegen_compiles_cold``, and the
+milliseconds the JVM's JIT compilers spent during each run (a
+``CompilationMXBean`` delta) under ``jit_ms`` and ``jit_ms_cold``.
 
 Output contract (VERDICT r14 next-round #1): the driver's stdout capture
 keeps only the LAST ~2000 characters, so the full per-query line (first)
@@ -376,27 +378,33 @@ def main() -> None:
         codegen_compiles,
         default_parallelism,
         get_spark,
+        jit_compile_ms,
     )
 
     spark = get_spark("spark-graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
     specs = all_queries()
 
-    def run(name: str) -> tuple[float, int]:
-        """Wall seconds and Janino compiles of one noop-forced run."""
+    def run(name: str) -> tuple[float, int, int]:
+        """Wall seconds, Janino compiles and JIT compile milliseconds of
+        one noop-forced run."""
         spark.sparkContext.setJobDescription(name)
-        n0 = codegen_compiles(spark)
+        n0, jit0 = codegen_compiles(spark), jit_compile_ms(spark)
         t0 = time.perf_counter()
         specs[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         dt = time.perf_counter() - t0
         spark.sparkContext.setJobDescription(None)
-        return dt, codegen_compiles(spark) - n0
+        return dt, codegen_compiles(spark) - n0, jit_compile_ms(spark) - jit0
 
     compiles: dict[str, int] = {}
     compiles_cold: dict[str, int] = {}
+    jit: dict[str, int] = {}
+    jit_cold: dict[str, int] = {}
 
-    def record(name: str, times: dict[str, float], counts: dict[str, int]) -> None:
-        dt, counts[name] = run(name)
+    def record(
+        name: str, times: dict[str, float], counts: dict[str, int], jit_ms: dict[str, int]
+    ) -> None:
+        dt, counts[name], jit_ms[name] = run(name)
         times[name] = round(dt, 4)
 
     # Streaming-family entries are split out of the batch sweep and run on
@@ -451,7 +459,7 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in HEADLINE:
         if name in specs:
-            record(name, timings, compiles)
+            record(name, timings, compiles, jit)
 
     # Extension shapes: recorded, not summed (see RECORD_ONLY). Each
     # entry runs twice — cold first (recorded separately), then the
@@ -477,9 +485,9 @@ def main() -> None:
             spark.sparkContext.setLogLevel("ERROR")
             run("tpch_q6")  # per-session warmup, same as tools/measure.py
             reclaim(spark)
-            record(name, cold, compiles_cold)
+            record(name, cold, compiles_cold, jit_cold)
             reclaim(spark)
-            record(name, timings, compiles)
+            record(name, timings, compiles, jit)
 
     # --- session recycle: the streaming block runs on a fresh session ---
     # (see stream_batch note above). The batch sweep's primed artifacts
@@ -494,7 +502,7 @@ def main() -> None:
     for name in stream_batch:
         if name in specs:
             reclaim(spark)
-            record(name, timings, compiles)
+            record(name, timings, compiles, jit)
 
     # Same reclaim before the micro-batch section (state stores compete
     # for the same executor memory).
@@ -532,6 +540,8 @@ def main() -> None:
                     **out,
                     "codegen_compiles": compiles,
                     "codegen_compiles_cold": compiles_cold,
+                    "jit_ms": jit,
+                    "jit_ms_cold": jit_cold,
                 },
                 f,
             )

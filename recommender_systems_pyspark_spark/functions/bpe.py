@@ -23,9 +23,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import query
 from ..sources import tables
+from ..sources.sinks import rows_frame
 
 #: End-of-word sentinel (kept out of the corpus alphabet by construction).
 _EOW = "</w>"
@@ -261,10 +263,13 @@ def x_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
         (i + 1, l, r, l + r, c, float(stats.avg_syms_per_word))
         for i, (l, r, c) in enumerate(merges)
     ]
-    return docs.sparkSession.createDataFrame(
+    return rows_frame(
+        spark,
         rows,
-        "step int, left string, right string, merged string, "
-        "pair_count bigint, avg_syms_per_word double",
+        StructType.fromDDL(
+            "step int, left string, right string, merged string, "
+            "pair_count bigint, avg_syms_per_word double"
+        ),
     )
 
 

@@ -20,9 +20,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import query
 from ..sources import tables
+from ..sources.sinks import rows_frame
 
 #: Tokens per "line" segment for the segment-dedup operator.
 SEG_TOKENS = 10
@@ -694,7 +696,9 @@ def x_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked, _ = with_global_row_number(
         counts, [F.col("n").desc(), F.col("unit")], alias="rk"
     )
-    sizes = spark.createDataFrame([(s,) for s in _VOCAB_SIZES], "vocab_size int")
+    sizes = rows_frame(
+        spark, [(s,) for s in _VOCAB_SIZES], StructType.fromDDL("vocab_size int")
+    )
     covered = F.sum(F.when(F.col("rk") <= F.col("vocab_size"), F.col("n")).otherwise(0))
     return (
         ranked.crossJoin(F.broadcast(sizes))

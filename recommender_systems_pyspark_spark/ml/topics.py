@@ -25,9 +25,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import query
 from ..sources import tables
+from ..sources.sinks import rows_frame
 
 _K = 5
 _VOCAB_SIZE = 200
@@ -59,8 +61,10 @@ def x_lda_topics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     topics = model.describeTopics(_TOP_TERMS)
     vocab_df = F.broadcast(
-        spark.createDataFrame(
-            list(enumerate(cvm.vocabulary)), "term_id int, term string"
+        rows_frame(
+            spark,
+            list(enumerate(cvm.vocabulary)),
+            StructType.fromDDL("term_id int, term string"),
         )
     )
     return (

@@ -17,9 +17,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..registry import query, sql_exact_sum, exact_sum
 from ..sources import tables
+from ..sources.sinks import rows_frame
 
 
 def asof_join(
@@ -142,7 +144,9 @@ def j7_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     is BroadcastNestedLoopJoin over 4 rows, i.e. a map-only stage on the
     fact side; the groupBy is the only shuffle."""
     o = tables(spark, sf_dir)["orders"]
-    bands = spark.createDataFrame(list(PRICE_BANDS), "band string, lo double, hi double")
+    bands = rows_frame(
+        spark, list(PRICE_BANDS), StructType.fromDDL("band string, lo double, hi double")
+    )
     joined = o.join(
         F.broadcast(bands),
         (F.col("o_totalprice") >= F.col("lo")) & (F.col("o_totalprice") < F.col("hi")),

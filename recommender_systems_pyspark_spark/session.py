@@ -39,6 +39,29 @@ local mode:
   parent directory on their path, so a driver started outside the
   repository works too. Both confs are static: a session handed in
   (``__spark_entry__``) keeps Spark's stock workers.
+- The driver JVM starts with HotSpot's tier-4 (C2) thresholds at ten
+  times their JDK 17 defaults (``spark.driver.defaultJavaOptions``). A
+  session here is short bursts: a few reads and appends, a retrain, a
+  query. With the defaults, C2 recompiled framework code that runs only
+  for a moment (Janino, task and closure serialization, ASM, class
+  loading, Jackson): on a 4-vCPU VM the C2 threads used 13.5 s of a
+  25.1 s perfbench ``recommender_app`` pass (9.7 s inside its one
+  retrain), against 2.5 s of executor tasks. With the thresholds that
+  code stays at C1, while loops that stay hot, such as whole-stage
+  codegen over real data, still reach C2 within a fraction of a second:
+  C2 fell to 5.0 s of the pass and the pass's CPU median went from 29.0
+  to 19.1 s (``analytics`` 15.1 → 10.1 s, ``streaming`` 21.3 → 16.6 s).
+  Short queries pay for it in wall time: the sf0.1 headline's warm pass
+  (``tools/measure.py``, median of 10 runs) went from 11.0 to 11.8 s of
+  wall time while its CPU fell from 24.0 to 19.1 s, presumably because
+  more of their driver-side code runs as profiled C1 code for longer.
+  C1 alone (``TieredStopAtLevel=1``) cut CPU further but slowed that
+  pass by 60-80%. Only the driver JVM gets the flags; executors on a
+  cluster are JVMs of their own. A ``spark.driver.defaultJavaOptions``
+  from spark-defaults is replaced by the engine's value
+  (``extraJavaOptions``, which harnesses own, is appended to it and left
+  alone). The conf is static: a session handed in keeps its JVM as it
+  was started.
 
 Per-query conf overrides go through :func:`scoped_conf`, the one
 set-then-restore path, so every query leaves the session as it found it.
@@ -80,6 +103,15 @@ ENGINE_CONFS: dict[str, str] = {
     # Static. Workers that skip re-reading Spark's unchanged jar and zips
     # on every task (~135-224 ms of CPU each). See the module docstring.
     "spark.python.daemon.module": "recommender_systems_pyspark_spark.pyworker",
+    # Static, driver JVM only. C2 thresholds at ten times JDK 17's
+    # (5000/600/15000/40000): framework code that runs for a moment (Janino,
+    # task serialization, class loading) stays at C1, while loops that stay
+    # hot still reach C2 within a fraction of a second. defaultJavaOptions,
+    # because harnesses own extraJavaOptions. See the module docstring.
+    "spark.driver.defaultJavaOptions": (
+        "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000"
+        " -XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+    ),
 }
 
 
@@ -135,8 +167,9 @@ def get_spark(app_name: str = "spark-graft", *, shuffle_partitions: int | None =
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable :data:`ENGINE_CONFS` to an externally
     provided session (e.g. one handed to ``__spark_entry__``). Static confs
-    (the codegen cache, the Python worker daemon and path, master, memory)
-    are fixed when that session was built and are left alone."""
+    (the codegen cache, the Python worker daemon and path, the driver JVM's
+    options, master, memory) are fixed when that session was built and are
+    left alone."""
     for k, v in ENGINE_CONFS.items():
         if spark.conf.isModifiable(k):
             spark.conf.set(k, v)
@@ -149,6 +182,15 @@ def codegen_compiles(spark: SparkSession) -> int:
     to count the compiles of the work between them."""
     metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def jit_compile_ms(spark: SparkSession) -> int:
+    """Milliseconds the driver JVM's JIT compilers (C1 and C2 together)
+    have spent compiling so far (``CompilationMXBean``); diff two reads to
+    get the JIT time of the work between them. In local mode the driver
+    JVM runs every task too."""
+    mgmt = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return int(mgmt.getCompilationMXBean().getTotalCompilationTime())
 
 
 @contextmanager

@@ -4,7 +4,8 @@ ingest-gate fixture invariant (ADVICE r14 #3), the KMV membership-set
 pair expansion that replaced the exact tier's h-keyed self-join
 (VERDICT r14 next-round #2), the LPA session memo, the conf hygiene
 of every query that scopes session confs, the codegen cache's hold on a
-repeated headline pass, and tune_session's derived confs."""
+repeated headline pass, tune_session's derived confs and the driver
+JVM's JIT thresholds."""
 
 from __future__ import annotations
 
@@ -274,7 +275,7 @@ def test_tune_session_sets_every_modifiable_engine_conf(spark):
     """On a session with the engine confs unset, tune_session sets every
     runtime-modifiable ENGINE_CONFS key to its engine value and skips the
     static ones (the codegen cache size, the Python workers' daemon and
-    path) without raising."""
+    path, the driver JVM's options) without raising."""
     from recommender_systems_pyspark_spark.session import ENGINE_CONFS, tune_session
 
     session = spark.newSession()
@@ -283,8 +284,35 @@ def test_tune_session_sets_every_modifiable_engine_conf(spark):
         "spark.sql.codegen.cache.maxEntries",
         "spark.executorEnv.PYTHONPATH",
         "spark.python.daemon.module",
+        "spark.driver.defaultJavaOptions",
     }
     for k in runtime:
         session.conf.unset(k)
     assert tune_session(session) is session
     assert {k: session.conf.get(k) for k in runtime} == runtime
+
+
+def test_engine_jvm_uses_engine_jit_thresholds(spark):
+    """The session's JVM was started with the C2 thresholds of
+    ENGINE_CONFS' ``spark.driver.defaultJavaOptions``, set on its command
+    line rather than left at their defaults."""
+    from recommender_systems_pyspark_spark.session import ENGINE_CONFS
+
+    wanted = dict(
+        opt.removeprefix("-XX:").split("=")
+        for opt in ENGINE_CONFS["spark.driver.defaultJavaOptions"].split()
+    )
+    assert set(wanted) == {
+        "Tier4InvocationThreshold",
+        "Tier4MinInvocationThreshold",
+        "Tier4CompileThreshold",
+        "Tier4BackEdgeThreshold",
+    }
+    jvm = spark.sparkContext._jvm
+    bean_class = jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    bean = jvm.java.lang.management.ManagementFactory.getPlatformMXBean(bean_class)
+    got = {}
+    for name in wanted:
+        opt = bean.getVMOption(name)
+        got[name] = (opt.getValue(), opt.getOrigin().toString())
+    assert got == {name: (value, "VM_CREATION") for name, value in wanted.items()}

@@ -33,6 +33,7 @@ from recommender_systems_pyspark_spark.sources.sinks import (
     table_exists,
     write_table,
 )
+from tests.conftest import SF_SMOKE
 
 TITLES_SCHEMA = StructType(
     [
@@ -213,6 +214,31 @@ def test_insert_rows_runs_no_python_worker(spark, tmpdir, monkeypatch):
     rdd = df._jdf.queryExecution().toRdd()
     assert "PythonRDD" not in rdd.toDebugString()
     assert rdd.getNumPartitions() == 1
+
+
+@pytest.mark.parametrize(
+    "name", ["j7_range_join", "x_vocab_coverage", "x_bpe_train", "x_lda_topics"]
+)
+def test_driver_list_frames_run_no_python_worker(spark, name, monkeypatch):
+    """The small frames these queries build from driver lists (price bands,
+    vocabulary sizes, the learned merge table, the LDA vocabulary) are
+    Arrow local relations: no frame the query creates scans an RDD, which
+    createDataFrame(<list>) would have made with a Python-worker stage."""
+    from recommender_systems_pyspark_spark.registry import all_queries
+
+    plans = []
+    create = type(spark).createDataFrame
+
+    def spy(self, *args, **kwargs):
+        df = create(self, *args, **kwargs)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return df
+
+    monkeypatch.setattr(type(spark), "createDataFrame", spy)
+    all_queries()[name].fn(spark, SF_SMOKE)
+    assert plans
+    for plan in plans:
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
 
 
 def test_imdb_etl_roundtrip(spark, tmp_path):
