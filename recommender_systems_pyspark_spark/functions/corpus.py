@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 from ..operators.ranking import with_global_ntile
 from ..registry import query
 from ..sources import tables
-from .similarity import dot
+from .centroids import centroids_assembled, centroids_exploded, sql_centroids, sql_nearest
 
 #: Stopword marker set for the quality gate (fixture corpus is synthetic
 #: space-separated tokens; 'the'/'a' are its function words).
@@ -323,12 +323,25 @@ def x_mixture_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Centroid machinery lives in functions/centroids.py (leaf module shared
-# with similarity.x_knn_ivf_topk); re-exported here for compatibility.
-from .centroids import _CENT_QUANTUM, _SQL_CENTROIDS, centroids_exploded  # noqa: E402,F401
+def _sql_embed_assign() -> str:
+    return "WITH " + ",\n".join(
+        [
+            f"cd AS ({sql_centroids()})",
+            """c AS (
+      SELECT label AS cell, list(centroid ORDER BY dim) AS cvec
+      FROM cd GROUP BY label
+    )""",
+            "p AS (SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings)",
+            *sql_nearest("a", "p", "c"),
+        ]
+    ) + """
+    SELECT vec_id, label, cell AS assigned_label, dist,
+           label = cell AS is_correct
+    FROM a
+    """
 
 
-@query("x_embed_centroids", oracle=_SQL_CENTROIDS)
+@query("x_embed_centroids", oracle=sql_centroids())
 def x_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids, exploded to (label, dim, centroid)
     rows — the trained coarse quantizer the IVF/ANN path probes against.
@@ -339,72 +352,34 @@ def x_embed_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     return centroids_exploded(t["embeddings"])
 
 
-@query(
-    "x_embed_assign",
-    oracle=f"""
-    WITH cd AS ({_SQL_CENTROIDS}),
-    cent AS (
-      SELECT label AS c_label, list(centroid ORDER BY dim) AS cvec
-      FROM cd GROUP BY label
-    ),
-    d AS (
-      SELECT e.vec_id, e.label, c.c_label,
-             list_transform(generate_series(1, len(e.embedding)),
-                            i -> e.embedding[i]::DOUBLE - c.cvec[i]) AS diff
-      FROM embeddings e CROSS JOIN cent c
-    ),
-    r AS (
-      SELECT vec_id, label, c_label,
-             list_dot_product(diff, diff) AS dist,
-             ROW_NUMBER() OVER (
-               PARTITION BY vec_id
-               ORDER BY list_dot_product(diff, diff), c_label
-             ) AS rn
-      FROM d
-    )
-    SELECT vec_id, label, c_label AS assigned_label, dist,
-           label = c_label AS is_correct
-    FROM r WHERE rn = 1
-    """,
-)
+@query("x_embed_assign", oracle=_sql_embed_assign())
 def x_embed_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid assignment: classify every vector to its closest
     per-label centroid (squared L2), reporting the true label, assigned
     label, distance, and agreement — the cell-assignment step of IVF
     indexing and the standard domain-bucketing classifier.
 
-    Plan shape: the centroid table (labels × dims → labels rows after
-    re-assembly) is broadcast; the ×|labels| candidate fan-out is a
-    BroadcastNestedLoopJoin (map-side, no shuffle of the corpus), and the
-    argmin is a per-vec_id window over |labels| rows. The distance fold
+    Plan shape: the per-label centroids (labels rows after re-assembly)
+    are the model :func:`vectors.nearest_centroid` broadcasts; the
+    ×|labels| candidate fan-out is a BroadcastNestedLoopJoin (map-side,
+    no shuffle of the corpus) and the (dist, label) ``min_by`` partially
+    aggregates before one row per vector shuffles. The distance fold
     matches DuckDB's list_dot_product accumulation order, and centroids
-    come from the exact decimal average, so ``dist`` is bit-comparable."""
-    t = tables(spark, sf_dir)
-    e = t["embeddings"]
-    cent = (
-        centroids_exploded(e)
-        .groupBy(F.col("label").alias("c_label"))
-        .agg(F.array_sort(F.collect_list(F.struct("dim", "centroid"))).alias("dc"))
-        .select("c_label", F.transform("dc", lambda s: s.getField("centroid")).alias("cvec"))
+    come from the exact quantized average, so ``dist`` is bit-comparable."""
+    from .vectors import nearest_centroid
+
+    e = tables(spark, sf_dir)["embeddings"]
+    cent = centroids_assembled(e).select(
+        F.col("label").alias("cell"), F.col("centroid").alias("cvec")
     )
-    diff = F.zip_with(
-        F.col("embedding"), F.col("cvec"), lambda x, y: x.cast("double") - y
-    )
-    scored = (
-        e.crossJoin(F.broadcast(cent))
-        .select("vec_id", "label", "c_label", dot(diff, diff).alias("dist"))
-    )
-    w = Window.partitionBy("vec_id").orderBy("dist", "c_label")
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select(
-            "vec_id",
-            "label",
-            F.col("c_label").alias("assigned_label"),
-            "dist",
-            (F.col("label") == F.col("c_label")).alias("is_correct"),
-        )
+    return nearest_centroid(
+        e.select("vec_id", "label", "embedding"), cent, "embedding"
+    ).select(
+        "vec_id",
+        "label",
+        F.col("cell").alias("assigned_label"),
+        "dist",
+        (F.col("label") == F.col("cell")).alias("is_correct"),
     )
 
 

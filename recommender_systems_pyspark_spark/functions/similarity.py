@@ -16,11 +16,14 @@ Scale architecture (100 TB of vectors):
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tables
+from .centroids import centroids_assembled, sql_centroids, sql_lloyd_parts, sql_nearest
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -265,10 +268,8 @@ def x_embed_neardup_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_ivf_topk() -> str:
-    from .centroids import _SQL_CENTROIDS
-
     return f"""
-    WITH cd AS ({_SQL_CENTROIDS}),
+    WITH cd AS ({sql_centroids()}),
     cent AS (
       SELECT label, list(centroid ORDER BY dim) AS centroid
       FROM cd GROUP BY label
@@ -304,8 +305,6 @@ def x_knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell ranking included — replays in SQL. (The previous F.avg centroid
     was order-dependent in the last ulp, which is all that kept this
     rows-only.) pytest additionally measures recall vs the exact query."""
-    from .centroids import centroids_assembled
-
     t = tables(spark, sf_dir)
     e = t["embeddings"]
     cent = centroids_assembled(e)
@@ -345,10 +344,13 @@ _SEMDEDUP_TAU = 0.4
 _SEMDEDUP_ITERS = 2
 
 
-def _sql_semdedup() -> str:
-    from .vectors import sql_kmeans_sqrtn_parts
+#: The √N quantizer's k in the oracles' Lloyd unroll: ceil(sqrt(N)) of
+#: the training rows ``e``, as :func:`cached_centroids` derives it.
+_SQL_SQRTN_K = "(SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) FROM e)"
 
-    chain = ",\n".join(sql_kmeans_sqrtn_parts(_SEMDEDUP_ITERS))
+
+def _sql_semdedup() -> str:
+    chain = ",\n".join(sql_lloyd_parts(_SQL_SQRTN_K, _SEMDEDUP_ITERS))
     return f"""
     WITH {chain},
     assign AS (
@@ -384,9 +386,9 @@ def semdedup_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a pure function of (corpus, n_iter) — train it ONCE, publish it
     through the versioned snapshot store, and let every later x_semdedup
     run (bench reruns, driver grades, downstream pipelines) pay only the
-    map-side assignment + within-cell prune. At 100 TB this is the only
+    broadcast assignment + within-cell prune. At 100 TB this is the only
     sane shape: the quantizer is model-sized (k×d doubles), refitting it
-    per query re-reads the whole corpus twice per Lloyd round. Cache key
+    per query re-reads the whole corpus once per Lloyd round. Cache key
     is a fingerprint of the sf-dir's files + iteration count; doubles
     round-trip parquet bit-exactly, so a reloaded model assigns
     identically to a fresh fit and the unrolled DuckDB oracle keeps
@@ -405,16 +407,17 @@ def cached_centroids(
     """Load-or-train a √N-k-means model for ``train`` (a (vec_id,
     embedding) frame), keyed by (sf-dir contents, subset, iters) in the
     versioned snapshot store. Shared by the full-corpus and incremental
-    semdedup paths."""
+    semdedup paths. k = ceil(sqrt(N)) keeps the within-cell pair joins
+    (N/k)²·k = N^1.5-bounded instead of N²/k at a fixture-fixed k."""
     from ..sources.versioned import load_or_build
-    from .vectors import kmeans_sqrtn_model
+    from .vectors import kmeans
 
     return load_or_build(
         spark,
         "semdedup_centroids",
         sf_dir,
         f"{subset}_i{_SEMDEDUP_ITERS}",
-        lambda: kmeans_sqrtn_model(train, n_iter=_SEMDEDUP_ITERS),
+        lambda: kmeans(train, math.ceil(math.sqrt(train.count())), _SEMDEDUP_ITERS),
     )
 
 
@@ -430,22 +433,23 @@ def x_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     that removed ~50% of LAION with no quality loss in the paper.
 
     The coarse quantizer is TRAINED k-means with k = ceil(sqrt(N))
-    (:func:`vectors.kmeans_sqrtn`, the x_embed_kmeans path), replacing
-    the r6 fixture-fixed per-label centroids whose (N/k)² pair join was
-    the one measured super-linear operator (19.5× at 10× data,
-    BENCH_SCALE_r06). With k ~ sqrt(N) both the assignment (N·k) and the
+    (:func:`cached_centroids`: :func:`vectors.kmeans`, the x_embed_kmeans
+    trainer), replacing the r6 fixture-fixed per-label centroids whose
+    (N/k)² pair join was the one measured super-linear operator (19.5× at
+    10× data, BENCH_SCALE_r06). With k ~ sqrt(N) both the assignment (N·k) and the
     within-cell pair join (N²/k) are N^1.5-bounded — the paper's own
     sizing discipline. The quantizer chain stays engine-portable
     (deterministic seeds, quantized-exact updates, (dist, cell) ties), so
     the oracle unrolls the TRAINED model into SQL and the driver
     hash-gates assignment + verdicts end to end.
 
-    Plan shape at 100 TB: centroid assignment is map-side argmin against
-    a broadcast k×d model (array_min over (dist, cell) structs — the
-    corpus never shuffles for assignment, see kmeans_assign_mapside);
-    the pair join shuffles once on the cluster key; dup counting is one
-    map-side-combinable aggregate on vec_id."""
-    from .vectors import kmeans_assign_mapside
+    Plan shape at 100 TB: centroid assignment is a broadcast cross join
+    against the k×d model whose (dist, cell) ``min_by`` partially
+    aggregates map-side, so one row per vector shuffles
+    (:func:`vectors.nearest_centroid`); the pair join shuffles once on
+    the cluster key; dup counting is one map-side-combinable aggregate on
+    vec_id."""
+    from .vectors import nearest_centroid
 
     t = tables(spark, sf_dir)
     e = t["embeddings"]
@@ -453,9 +457,10 @@ def x_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (semdedup_centroids) — first call fits and publishes, every later
     # call assigns against the persisted k×d model (VERDICT r7 #6).
     assign = (
-        kmeans_assign_mapside(
+        nearest_centroid(
             e.select("vec_id", "label", "embedding"),
             semdedup_centroids(spark, sf_dir),
+            "embedding",
         )
         .select(
             "vec_id",
@@ -525,29 +530,17 @@ def sql_semdedup_inc_parts(pred_new: str) -> str:
     label, v, cell — the batch's map-side cell assignment) and ``hits``
     (vec_id, n_close, max_sim — established near-dups per batch vector).
     Shared by x_semdedup_incremental and the cross-modal ingest gate."""
-    from .vectors import sql_kmeans_sqrtn_parts
-
-    chain = ",\n".join(
-        sql_kmeans_sqrtn_parts(_SEMDEDUP_ITERS, where=f"NOT ({pred_new})")
+    chain = sql_lloyd_parts(
+        _SQL_SQRTN_K, _SEMDEDUP_ITERS, where=f"NOT ({pred_new})"
     )
-    sq_dist = (
-        "list_dot_product("
-        "list_transform(generate_series(1, len(n.v)), i -> n.v[i] - c.cvec[i]), "
-        "list_transform(generate_series(1, len(n.v)), i -> n.v[i] - c.cvec[i]))"
-    )
-    return f"""{chain},
-    newv AS (
+    chain.append(
+        f"""newv AS (
       SELECT vec_id, label, embedding::DOUBLE[] AS v
       FROM embeddings WHERE {pred_new}
-    ),
-    new_assign AS (
-      SELECT vec_id, label, v, cell FROM (
-        SELECT n.vec_id, n.label, n.v, c.cell, {sq_dist} AS dist,
-               ROW_NUMBER() OVER (PARTITION BY n.vec_id
-                                  ORDER BY {sq_dist}, c.cell) AS rn
-        FROM newv n CROSS JOIN c{_SEMDEDUP_ITERS} c
-      ) WHERE rn = 1
-    ),
+    )"""
+    )
+    chain += sql_nearest("new_assign", "newv", f"c{_SEMDEDUP_ITERS}")
+    return ",\n".join(chain) + f""",
     hits AS (
       SELECT n.vec_id,
              COUNT(*) AS n_close,
@@ -605,7 +598,7 @@ def semdedup_inc_verdicts(
     given model-store ``subset`` key. The Spark twin of
     :func:`sql_semdedup_inc_parts`; shared by x_semdedup_incremental and
     the cross-modal ingest gate."""
-    from .vectors import kmeans_assign_mapside
+    from .vectors import nearest_centroid
 
     e = tables(spark, sf_dir)["embeddings"]
     existing = e.where(~is_new)
@@ -616,13 +609,15 @@ def semdedup_inc_verdicts(
     model = cached_centroids(
         spark, sf_dir, subset, existing.select("vec_id", "embedding")
     )
-    corpus = kmeans_assign_mapside(existing.select("vec_id", "embedding"), model).select(
+    corpus = nearest_centroid(
+        existing.select("vec_id", "embedding"), model, "embedding"
+    ).select(
         F.col("cell").alias("cluster"),
         F.col("embedding").alias("x_emb"),
         norm(F.col("embedding")).alias("x_nrm"),
     )
     new_assign = (
-        kmeans_assign_mapside(batch.select("vec_id", "label", "embedding"), model)
+        nearest_centroid(batch.select("vec_id", "label", "embedding"), model, "embedding")
         .select(
             "vec_id",
             "label",
@@ -677,10 +672,8 @@ _RECALL_MAX_PROBE = 3
 
 
 def _sql_ivf_recall() -> str:
-    from .centroids import _SQL_CENTROIDS
-
     return f"""
-    WITH cd AS ({_SQL_CENTROIDS}),
+    WITH cd AS ({sql_centroids()}),
     cent AS (
       SELECT label, list(centroid ORDER BY dim) AS centroid
       FROM cd GROUP BY label
@@ -752,8 +745,6 @@ def x_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole curve."""
     t = tables(spark, sf_dir)
     e = t["embeddings"]
-    from .centroids import centroids_assembled
-
     q = e.where(F.col("vec_id") < _RECALL_Q).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
@@ -920,13 +911,10 @@ x_knn_filtered_topk.__doc__ = x_knn_filtered_topk.__doc__.format(
 # Cluster representatives: per-cell medoid selection (round 13)
 # ---------------------------------------------------------------------------
 
-from .centroids import _SQL_CENTROIDS as _MEDOID_SQL_CENTROIDS  # noqa: E402
-
-
 @query(
     "x_cluster_medoids",
     oracle=f"""
-    WITH cent AS ({_MEDOID_SQL_CENTROIDS}),
+    WITH cent AS ({sql_centroids()}),
     c2 AS (SELECT label, list(centroid ORDER BY dim) AS cv
            FROM cent GROUP BY label),
     scored AS (
@@ -971,8 +959,6 @@ def x_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from .centroids import centroids_assembled
-
     e = tables(spark, sf_dir)["embeddings"]
     cent = centroids_assembled(e)
     scored = e.join(F.broadcast(cent), "label").select(
@@ -1000,26 +986,11 @@ def x_cluster_medoids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding centroid drift between corpus versions (round 13)
 # ---------------------------------------------------------------------------
 
-#: DuckDB twin of the per-half quantized centroid (the centroids.py law
-#: with a version predicate — floor-quantized exact bigint sums, one
-#: final double division).
-_DRIFT_SQL_CENT = """
-      SELECT label, CAST(i - 1 AS INT) AS dim,
-             CAST(SUM(CAST(floor(v * 1000000000.0) AS BIGINT)) AS DOUBLE)
-               / COUNT(v) / 1000000000.0 AS centroid
-      FROM (SELECT label,
-                   unnest(generate_series(1, len(embedding))) AS i,
-                   unnest(embedding::DOUBLE[]) AS v
-            FROM embeddings WHERE vec_id % 2 = {parity})
-      GROUP BY label, i
-"""
-
-
 @query(
     "x_embed_centroid_drift",
     oracle=f"""
-    WITH c_old AS ({_DRIFT_SQL_CENT.format(parity=0)}),
-    c_new AS ({_DRIFT_SQL_CENT.format(parity=1)}),
+    WITH c_old AS ({sql_centroids("vec_id % 2 = 0")}),
+    c_new AS ({sql_centroids("vec_id % 2 = 1")}),
     a_old AS (SELECT label, list(centroid ORDER BY dim) AS cv
               FROM c_old GROUP BY label),
     a_new AS (SELECT label, list(centroid ORDER BY dim) AS cv
@@ -1065,8 +1036,6 @@ def x_embed_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift family (TVD r9, FD r10, KMV overlap r12) gains the
     vector-geometry face.
     """
-    from .centroids import centroids_assembled
-
     e = tables(spark, sf_dir)["embeddings"]
     old = e.where(F.col("vec_id") % 2 == 0)
     new = e.where(F.col("vec_id") % 2 == 1)

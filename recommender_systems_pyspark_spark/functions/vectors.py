@@ -6,23 +6,34 @@ counterpart).
   ANN systems apply before indexing (4× smaller than float32, cache-
   resident codebooks); the error profile tells you whether recall will
   survive it.
-- k-means (Lloyd's): the trained coarse quantizer for IVF — per-round one
-  broadcast-assign pass over the corpus and one tiny aggregate back.
+- k-means: ONE nearest-centroid assignment (:func:`nearest_centroid`)
+  and ONE Lloyd loop (:func:`lloyd`) serve every trained quantizer — the
+  k=8 coarse quantizer of x_embed_kmeans, the √N SemDeDup blocking
+  quantizer (similarity.py), the PQ codebooks (one codebook per
+  subspace, grouped by ``sub``) — and x_embed_assign's per-label
+  classifier; one DuckDB unroll (:func:`centroids.sql_lloyd_parts`)
+  replays the training for all their oracles.
+- product quantization (PQ) and IVF-PQ ANN search over those codebooks.
 
 Scale notes: quantization is map-only codegen given a broadcast per-dim
 min/max table (dims rows). k-means keeps ONLY k×d doubles of driver state
 (the centroids — bounded by model size, not corpus size, the same contract
-as pyspark.ml's KMeans); each iteration is one map-side assignment pass +
-one (cell, dim)-keyed aggregate.
+as pyspark.ml's KMeans); each round is one broadcast assignment (a
+``min_by`` whose partial aggregation leaves one row per vector to
+shuffle) plus one (cell, dim)-keyed aggregate, and the k-row model is the
+only thing checkpointed.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources import tables
+from .centroids import centroids_assembled, sql_centroids, sql_lloyd_parts
 from .similarity import dot
 
 #: Quantization levels for int8 scalar quantization.
@@ -102,145 +113,106 @@ def x_embed_quantize_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def kmeans_assign(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, embedding, cell, dist): nearest centroid per vector.
-    ``cent`` is the tiny (cell, cvec) table — broadcast, so this is one
-    map pass over the corpus; the argmin is a ``min_by`` hash aggregate
-    over the (dist, cell) struct — the same total order the old
-    row_number window used, without sorting the |corpus|×k candidate
-    frame every call (r10: this runs 6× per k-means train)."""
-    diff = F.zip_with(F.col("embedding"), F.col("cvec"), lambda x, y: x.cast("double") - y)
+# ---------------------------------------------------------------------------
+# k-means: one nearest-centroid assignment, one Lloyd loop
+# ---------------------------------------------------------------------------
+
+
+def nearest_centroid(
+    points: DataFrame, cent: DataFrame, vec: str, group: Sequence[str] = ()
+) -> DataFrame:
+    """(vec_id, *group, <other point columns>, cell, dist): the nearest
+    ``cent`` centroid to each ``vec`` array of ``points``, by squared L2.
+
+    ``cent`` is the (*group, cell, cvec) model — k rows per group,
+    broadcast — so the candidates are a map-side cross join (an equi join
+    on ``group``: one codebook per PQ subspace). The argmin is a
+    ``min_by`` over the (dist, cell) struct: ties break on cell, the
+    order the DuckDB oracles' ROW_NUMBER replays. Partial aggregation
+    collapses each vector's k candidates to one row before the
+    ``vec_id`` exchange, so only one row per point shuffles. The distance
+    is the left-fold :func:`dot` of the zip_with difference, bit-equal to
+    DuckDB's list_dot_product."""
+    diff = F.zip_with(F.col(vec), F.col("cvec"), lambda x, y: x.cast("double") - y)
+    cands = (
+        points.join(F.broadcast(cent), list(group))
+        if group
+        else points.crossJoin(F.broadcast(cent))
+    )
+    carried = [c for c in points.columns if c != "vec_id" and c not in group]
     return (
-        e.crossJoin(F.broadcast(cent))
-        .select("vec_id", "embedding", "cell", dot(diff, diff).alias("dist"))
-        .groupBy("vec_id")
+        cands.select(*points.columns, "cell", dot(diff, diff).alias("dist"))
+        .groupBy("vec_id", *group)
         .agg(
             F.min_by(
-                F.struct("embedding", "cell", "dist"), F.struct("dist", "cell")
+                F.struct(*carried, "cell", "dist"), F.struct("dist", "cell")
             ).alias("best")
         )
-        .select("vec_id", "best.embedding", "best.cell", "best.dist")
+        .select("vec_id", *group, "best.*")
     )
 
 
-def kmeans(e: DataFrame, k: int = 8, n_iter: int = 5) -> tuple[DataFrame, list[float]]:
-    """Lloyd's k-means over an (vec_id, embedding) frame; returns the final
-    assignment frame and the per-iteration inertia trace.
+def lloyd(
+    points: DataFrame,
+    seeds: DataFrame,
+    vec: str,
+    n_iter: int,
+    group: Sequence[str] = (),
+) -> DataFrame:
+    """Lloyd's k-means of the (vec_id, *group, ``vec``) ``points`` from
+    the ``seeds`` model (*group, cell, cvec): ``n_iter`` rounds of
+    assignment (:func:`nearest_centroid`) and update (the floor-quantized
+    exact average of :mod:`centroids`, keyed by (*group, cell), so
+    partial-aggregation order cannot move a centroid).
+    A cell that no point chose keeps its previous centroid. Returns the
+    trained model.
 
-    Deterministic throughout: seeds are the k lowest vec_ids, assignment
-    ties break on cell id, and the centroid update uses the floor-quantized
-    exact average (see corpus.py) so partial-aggregation order can't move
-    results. Driver state per round is k×d doubles + one inertia double —
-    model-sized, not data-sized (the same boundary pyspark.ml.KMeans
-    crosses each iteration); everything data-sized stays in executors."""
-    spark = e.sparkSession
-    quantum = 1_000_000_000.0
-    cent = (
+    Driver state is the model alone: each round's k-row model is
+    checkpointed lazily, which truncates the lineage without a job of its
+    own (it materializes when the next assignment broadcasts it); the
+    corpus-sized assignment is never materialized. Every step is
+    deterministic and engine-portable, so
+    :func:`centroids.sql_lloyd_parts` replays the training bit for bit."""
+    keys = [*group, "cell"]
+    cent = seeds
+    for _ in range(n_iter):
+        new = centroids_assembled(
+            nearest_centroid(points, cent, vec, group), keys, vec
+        ).withColumnRenamed("centroid", "cvec")
+        kept = cent.join(new, keys, "left_anti")
+        cent = new.unionByName(kept).localCheckpoint(eager=False)
+    return cent
+
+
+def _lowest(e: DataFrame, k: int) -> DataFrame:
+    """The k lowest-vec_id rows of ``e`` with ``cell`` numbering them
+    0..k-1 (the window runs over those k rows only). Numbered by the
+    bigint vec_id itself: an int cast would wrap past 2^31 and part from
+    the oracle's ORDER BY vec_id."""
+    return (
         e.orderBy("vec_id")
         .limit(k)
-        .select(
-            # seed ordering on the ORIGINAL bigint vec_id — an int cast
-            # here wraps for vec_id > 2^31 and diverges seed/cell
-            # numbering from the oracle's ORDER BY vec_id (ADVICE r7)
-            F.col("vec_id").alias("_seed_id"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("cvec"),
-        )
-        .withColumn("cell", F.row_number().over(Window.orderBy("_seed_id")) - 1)
-        .select("cell", "cvec")
+        .withColumn("cell", F.row_number().over(Window.orderBy("vec_id")) - 1)
     )
-    inertia: list[float] = []
-    assigned = kmeans_assign(e, cent)
-    for _ in range(n_iter):
-        assigned = assigned.localCheckpoint()  # truncate per-round lineage
-        inertia.append(assigned.agg(F.sum("dist")).collect()[0][0])
-        new_cent = (
-            assigned.select("cell", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cell", "dim")
-            .agg(
-                (
-                    F.sum(F.floor(F.col("v").cast("double") * quantum)).cast("double")
-                    / F.count("v")
-                    / quantum
-                ).alias("c")
-            )
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("dc"))
-            .select("cell", F.transform("dc", lambda s: s.getField("c")).alias("cvec"))
-        )
-        # empty cells keep their previous centroid (anti-join back in)
-        kept = cent.join(new_cent, "cell", "left_anti")
-        cent = new_cent.unionByName(kept).localCheckpoint()
-        assigned = kmeans_assign(e, cent)
-    return assigned, inertia
+
+
+def kmeans(e: DataFrame, k: int = 8, n_iter: int = 5) -> DataFrame:
+    """The k-means model (cell, cvec) of a (vec_id, embedding) frame:
+    seeds are the k lowest vec_ids' embeddings, then ``n_iter`` Lloyd
+    rounds. Driver state is k×d doubles — model-sized, not data-sized
+    (the boundary pyspark.ml's KMeans crosses each iteration)."""
+    seeds = _lowest(e, k).select(
+        "cell", F.transform("embedding", lambda x: x.cast("double")).alias("cvec")
+    )
+    return lloyd(e, seeds, "embedding", n_iter)
 
 
 def _sql_kmeans(k: int = 8, n_iter: int = 5) -> str:
-    """DuckDB replica of :func:`kmeans`, the 5 Lloyd iterations UNROLLED
-    as a CTE chain. Possible only because every step of the trainer is
-    engine-portable by construction: deterministic seeds (k lowest
-    vec_ids), the same left-fold squared-L2 as list_dot_product,
-    (dist, cell)-ordered argmin ties, and the floor-quantized exact
-    centroid average — so c0→a0→c1→…→a5 replays bit-for-bit."""
-    q = "1000000000.0"
-    sq_dist = (
-        "list_dot_product("
-        "list_transform(generate_series(1, len(e.v)), i -> e.v[i] - c.cvec[i]), "
-        "list_transform(generate_series(1, len(e.v)), i -> e.v[i] - c.cvec[i]))"
-    )
-    parts = [
-        "e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        f"""c0 AS MATERIALIZED (
-          SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, v AS cvec
-          FROM (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT {k})
-        )""",
-    ]
-
-    def assign(c: str, a: str) -> list[str]:
-        return [
-            f"""{a}_all AS (
-              SELECT e.vec_id, e.v, c.cell, {sq_dist} AS dist
-              FROM e CROSS JOIN {c} c
-            )""",
-            f"""{a} AS MATERIALIZED (
-              SELECT vec_id, v, cell, dist FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                             ORDER BY dist, cell) AS rn
-                FROM {a}_all
-              ) WHERE rn = 1
-            )""",
-        ]
-
-    def update(a: str, cprev: str, c: str) -> list[str]:
-        return [
-            f"""{c}_new AS MATERIALIZED (
-              SELECT cell, list(cd ORDER BY dim) AS cvec FROM (
-                SELECT cell, dim,
-                       CAST(SUM(CAST(floor(v_el * {q}) AS BIGINT)) AS DOUBLE)
-                         / COUNT(v_el) / {q} AS cd
-                FROM (SELECT cell,
-                             unnest(generate_series(1, len(v))) AS dim,
-                             unnest(v) AS v_el
-                      FROM {a})
-                GROUP BY cell, dim
-              ) GROUP BY cell
-            )""",
-            f"""{c} AS MATERIALIZED (
-              SELECT cell, cvec FROM {c}_new
-              UNION ALL
-              SELECT p.cell, p.cvec FROM {cprev} p
-              WHERE p.cell NOT IN (SELECT cell FROM {c}_new)
-            )""",
-        ]
-
-    parts += assign("c0", "a0")
-    for i in range(1, n_iter + 1):
-        parts += update(f"a{i-1}", f"c{i-1}", f"c{i}")
-        parts += assign(f"c{i}", f"a{i}")
     return (
         "WITH "
-        + ",\n".join(parts)
+        + ",\n".join(sql_lloyd_parts(k, n_iter))
         + f"""
-    SELECT vec_id, CAST(cell AS INT) AS cell, dist
+    SELECT vec_id, cell, dist
     FROM a{n_iter}
     ORDER BY vec_id
     """
@@ -259,187 +231,12 @@ def x_embed_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterations as SQL CTEs and the driver hash-gates the TRAINED MODEL'S
     assignment — not just row counts. pytest additionally pins inertia
     monotonicity, assignment uniqueness, and determinism across runs."""
-    t = tables(spark, sf_dir)
-    assigned, _ = kmeans(t["embeddings"].select("vec_id", "embedding"))
+    e = tables(spark, sf_dir)["embeddings"].select("vec_id", "embedding")
     return (
-        assigned.select("vec_id", F.col("cell").cast("int").alias("cell"), "dist")
+        nearest_centroid(e, kmeans(e), "embedding")
+        .select("vec_id", "cell", "dist")
         .orderBy("vec_id")
     )
-
-
-# ---------------------------------------------------------------------------
-# sqrt(N)-scaled k-means — the SemDeDup coarse quantizer (VERDICT r6 #2)
-# ---------------------------------------------------------------------------
-
-
-def kmeans_assign_mapside(e: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, …, cell, dist): nearest centroid per vector with the whole
-    argmin MAP-SIDE — the k×d centroid table collapses to ONE row (an
-    array of (cell, cvec) structs, sorted by cell), broadcasts, and each
-    vector picks ``array_min`` of the per-centroid (dist, cell) structs.
-    Struct comparison is lexicographic, so the min is exactly the
-    (dist ASC, cell ASC) argmin the window form computes — but NOTHING
-    shuffles: :func:`kmeans_assign` moves N·k rows (each carrying the
-    embedding) through a per-vec_id window, which at k≈√N is an
-    N^1.5-row shuffle; here the corpus stays put and the model rides the
-    broadcast. This is the assignment shape that survives 100 TB: k×d
-    doubles per executor, one codegen pass over the data.
-
-    Distance values are bit-identical to the window form (same zip_with
-    diff, same left-fold ``dot``), so the DuckDB oracle's
-    ROW_NUMBER-over-(dist, cell) replay matches."""
-    carr = cent.groupBy().agg(
-        F.array_sort(F.collect_list(F.struct("cell", "cvec"))).alias("cents")
-    )
-
-    def _dist_cell(s: Column) -> Column:
-        diff = F.zip_with(
-            F.col("embedding"), s.getField("cvec"), lambda x, y: x.cast("double") - y
-        )
-        return F.struct(dot(diff, diff).alias("dist"), s.getField("cell").alias("cell"))
-
-    best = F.array_min(F.transform(F.col("cents"), _dist_cell))
-    return (
-        e.crossJoin(F.broadcast(carr))
-        .withColumn("best", best)
-        .drop("cents")
-        .withColumn("cell", F.col("best.cell"))
-        .withColumn("dist", F.col("best.dist"))
-        .drop("best")
-    )
-
-
-def kmeans_sqrtn(e: DataFrame, n_iter: int = 2) -> DataFrame:
-    """Lloyd's k-means with k = ceil(sqrt(N)) — the quantizer sizing that
-    keeps within-cell pair joins (N/k)²·k = N^1.5-bounded instead of
-    N²/k at fixture-fixed k (the one super-linear operator VERDICT r6
-    measured). Returns the final assignment frame (vec_id, …, cell).
-
-    Same determinism contract as :func:`kmeans` (k-lowest-vec_id seeds,
-    (dist, cell) ties, floor-quantized exact centroid averages, empty
-    cells keep their previous centroid), so the whole chain unrolls into
-    the DuckDB oracle (:func:`sql_kmeans_sqrtn_parts`). Driver state: ONE
-    scalar (the corpus count that sizes k) plus the k×d centroid model —
-    bounded by model size, never data size."""
-    return kmeans_assign_mapside(e, kmeans_sqrtn_model(e, n_iter))
-
-
-def kmeans_sqrtn_model(e: DataFrame, n_iter: int = 2) -> DataFrame:
-    """The TRAINED √N-k-means centroid model (cell, cvec) alone — split
-    out of :func:`kmeans_sqrtn` so callers can train once, persist the
-    k×d frame (``sources/versioned.write_snapshot``), and amortize the
-    Lloyd iterations across every later assignment pass (VERDICT r7 #6:
-    x_semdedup was paying 2 training rounds per query). Training is
-    fully deterministic, so a reloaded model is bit-identical to a fresh
-    fit and the unrolled DuckDB oracle stays valid either way."""
-    import math
-
-    k = int(math.ceil(math.sqrt(e.count())))
-    quantum = 1_000_000_000.0
-    cent = (
-        e.orderBy("vec_id")
-        .limit(k)
-        .select(
-            # seed ordering on the ORIGINAL bigint vec_id — an int cast
-            # here wraps for vec_id > 2^31 and diverges seed/cell
-            # numbering from the oracle's ORDER BY vec_id (ADVICE r7)
-            F.col("vec_id").alias("_seed_id"),
-            F.transform("embedding", lambda x: x.cast("double")).alias("cvec"),
-        )
-        .withColumn("cell", F.row_number().over(Window.orderBy("_seed_id")) - 1)
-        .select("cell", "cvec")
-    )
-    for _ in range(n_iter):
-        assigned = kmeans_assign_mapside(e.select("vec_id", "embedding"), cent)
-        new_cent = (
-            assigned.select("cell", F.posexplode("embedding").alias("dim", "v"))
-            .groupBy("cell", "dim")
-            .agg(
-                (
-                    F.sum(F.floor(F.col("v").cast("double") * quantum)).cast("double")
-                    / F.count("v")
-                    / quantum
-                ).alias("c")
-            )
-            .groupBy("cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("dc"))
-            .select("cell", F.transform("dc", lambda s: s.getField("c")).alias("cvec"))
-        )
-        kept = cent.join(new_cent, "cell", "left_anti")
-        # lazy checkpoint: truncates the per-iteration lineage without a
-        # dedicated materialization job (the k×d table materializes when
-        # the next assignment pass broadcasts it)
-        cent = new_cent.unionByName(kept).localCheckpoint(eager=False)
-    return cent
-
-
-def sql_kmeans_sqrtn_parts(n_iter: int = 2, where: str = "TRUE") -> list[str]:
-    """CTE parts replaying :func:`kmeans_sqrtn` in DuckDB, k derived from
-    the data (ceil(sqrt(COUNT(*)))) exactly as the Spark trainer derives
-    it — the final assignment CTE is ``a{n_iter}`` (vec_id, v, cell,
-    dist). ``where`` restricts the TRAINING corpus (the incremental
-    semdedup path trains on the established corpus only). Same unroll
-    discipline as :func:`_sql_kmeans`."""
-    q = "1000000000.0"
-    sq_dist = (
-        "list_dot_product("
-        "list_transform(generate_series(1, len(e.v)), i -> e.v[i] - c.cvec[i]), "
-        "list_transform(generate_series(1, len(e.v)), i -> e.v[i] - c.cvec[i]))"
-    )
-    parts = [
-        "e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v "
-        f"FROM embeddings WHERE {where})",
-        "kn AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS k FROM e)",
-        """c0 AS MATERIALIZED (
-          SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cell, v AS cvec
-          FROM (SELECT vec_id, v,
-                       ROW_NUMBER() OVER (ORDER BY vec_id) AS rn FROM e)
-          WHERE rn <= (SELECT k FROM kn)
-        )""",
-    ]
-
-    def assign(c: str, a: str) -> list[str]:
-        return [
-            f"""{a}_all AS (
-              SELECT e.vec_id, e.v, c.cell, {sq_dist} AS dist
-              FROM e CROSS JOIN {c} c
-            )""",
-            f"""{a} AS MATERIALIZED (
-              SELECT vec_id, v, cell, dist FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                                             ORDER BY dist, cell) AS rn
-                FROM {a}_all
-              ) WHERE rn = 1
-            )""",
-        ]
-
-    def update(a: str, cprev: str, c: str) -> list[str]:
-        return [
-            f"""{c}_new AS MATERIALIZED (
-              SELECT cell, list(cd ORDER BY dim) AS cvec FROM (
-                SELECT cell, dim,
-                       CAST(SUM(CAST(floor(v_el * {q}) AS BIGINT)) AS DOUBLE)
-                         / COUNT(v_el) / {q} AS cd
-                FROM (SELECT cell,
-                             unnest(generate_series(1, len(v))) AS dim,
-                             unnest(v) AS v_el
-                      FROM {a})
-                GROUP BY cell, dim
-              ) GROUP BY cell
-            )""",
-            f"""{c} AS MATERIALIZED (
-              SELECT cell, cvec FROM {c}_new
-              UNION ALL
-              SELECT p.cell, p.cvec FROM {cprev} p
-              WHERE p.cell NOT IN (SELECT cell FROM {c}_new)
-            )""",
-        ]
-
-    parts += assign("c0", "a0")
-    for i in range(1, n_iter + 1):
-        parts += update(f"a{i-1}", f"c{i-1}", f"c{i}")
-        parts += assign(f"c{i}", f"a{i}")
-    return parts
 
 
 # ---------------------------------------------------------------------------
@@ -456,12 +253,12 @@ _PQ_ITERS = 3
 
 
 def _subvectors(e: DataFrame, m: int) -> DataFrame:
-    """(vec_id, sub, svec): the m contiguous subspace slices of every
-    embedding — one map-only posexplode, ×m fan-out of a 2-column
-    relation; slice width is derived from the embedding length so the
+    """(vec_id, …, sub, svec): the m contiguous subspace slices of every
+    embedding, next to ``e``'s other columns — one map-only posexplode,
+    ×m fan-out; slice width is derived from the embedding length so the
     same code serves any dim divisible by m."""
     return e.select(
-        "vec_id",
+        *(c for c in e.columns if c != "embedding"),
         F.posexplode(
             F.expr(
                 f"transform(sequence(0, {m - 1}), s -> transform("
@@ -472,36 +269,14 @@ def _subvectors(e: DataFrame, m: int) -> DataFrame:
     )
 
 
-def pq_assign(sub: DataFrame, cent: DataFrame) -> DataFrame:
-    """(vec_id, sub, svec, cell, dist): nearest codebook entry per
-    (vector, subspace). ``cent`` is the (sub, cell, cvec) codebook —
-    m×k rows, broadcast — so assignment for ALL m codebooks is a single
-    map pass; the argmin is a ``min_by`` hash aggregate over the
-    (dist, cell) struct — same total order as the old row_number
-    window, no sort of the |corpus|×m×k candidate frame (r10; runs
-    n_iter+1 times per PQ train)."""
-    diff = F.zip_with(F.col("svec"), F.col("cvec"), lambda x, y: x - y)
-    return (
-        sub.join(F.broadcast(cent), "sub")
-        .select("vec_id", "sub", "svec", "cell", dot(diff, diff).alias("dist"))
-        .groupBy("vec_id", "sub")
-        .agg(
-            F.min_by(
-                F.struct("svec", "cell", "dist"), F.struct("dist", "cell")
-            ).alias("best")
-        )
-        .select("vec_id", "sub", "best.svec", "best.cell", "best.dist")
-    )
-
-
 #: Per-(session, sf_dir) memo of the trained PQ codebooks — the
 #: cached_scc_assignment pattern: x_embed_pq_topk and x_knn_ivfpq_topk
 #: train the identical m×k codebook from the identical full-corpus input,
-#: and the 3-round Lloyd loop (2 checkpoint jobs + 1 aggregate per round)
-#: was ~80% of each query's steady-state wall-clock (measured 6–7 s of a
-#: 7.8 s row at sf0.1). In-session only, never disk: the first consumer
-#: in any sweep pays the fit reproducibly (it lands in that query's COLD
-#: row), later consumers reuse the checkpointed m×k frame. At 100 TB this
+#: and the 3-round Lloyd fit was ~80% of each query's steady-state
+#: wall-clock (measured 6–7 s of a 7.8 s row at sf0.1). In-session only,
+#: never disk: the first consumer in any sweep pays the fit reproducibly
+#: (it lands in that query's COLD row), later consumers reuse the
+#: checkpointed m×k frame. At 100 TB this
 #: is the production shape — the ANN index's codebooks are trained once
 #: per corpus version, not per query.
 _PQ_CODEBOOK_MEMO: dict[tuple, DataFrame] = {}
@@ -525,50 +300,24 @@ def cached_pq_codebooks(spark, sf_dir: str) -> DataFrame:
 
 
 def pq_train(e: DataFrame, m: int = _PQ_M, k: int = _PQ_K, n_iter: int = _PQ_ITERS) -> DataFrame:
-    """Train the m PQ codebooks JOINTLY: every Lloyd iteration is ONE
-    assignment pass over the (vec_id, sub) relation for all m subspaces
-    at once plus one (sub, cell, dim)-keyed aggregate — not m separate
-    k-means runs, so the corpus is scanned n_iter times total regardless
-    of m. Determinism mirrors :func:`kmeans`: seeds are the k lowest
-    vec_ids' subvectors, assignment ties break on cell, centroid updates
-    use the floor-quantized exact average. The codebook never leaves the
-    cluster as anything bigger than an m×k-row DataFrame."""
-    sub = _subvectors(e, m)
-    quantum = 1_000_000_000.0
-    wseed = Window.partitionBy("sub").orderBy("vec_id")
-    cent = (
-        sub.withColumn("rn", F.row_number().over(wseed))
-        .where(F.col("rn") <= k)
-        .select("sub", (F.col("rn") - 1).cast("int").alias("cell"), F.col("svec").alias("cvec"))
+    """Train the m PQ codebooks (sub, cell, cvec) JOINTLY: one
+    :func:`lloyd` over the (vec_id, sub) relation grouped by ``sub``, so
+    every round is one assignment pass for all m subspaces at once plus
+    one (sub, cell, dim)-keyed aggregate — not m separate k-means runs.
+    Seeds are the k lowest vec_ids' subvectors. The codebook never
+    leaves the cluster as anything bigger than an m×k-row DataFrame."""
+    seeds = _subvectors(_lowest(e, k), m).select(
+        "sub", "cell", F.col("svec").alias("cvec")
     )
-    assigned = pq_assign(sub, cent)
-    for _ in range(n_iter):
-        assigned = assigned.localCheckpoint()  # truncate per-round lineage
-        new_cent = (
-            assigned.select("sub", "cell", F.posexplode("svec").alias("dim", "v"))
-            .groupBy("sub", "cell", "dim")
-            .agg(
-                (
-                    F.sum(F.floor(F.col("v") * quantum)).cast("double")
-                    / F.count("v")
-                    / quantum
-                ).alias("c")
-            )
-            .groupBy("sub", "cell")
-            .agg(F.array_sort(F.collect_list(F.struct("dim", "c"))).alias("dc"))
-            .select("sub", "cell", F.transform("dc", lambda s: s.getField("c")).alias("cvec"))
-        )
-        # empty cells keep their previous centroid
-        kept = cent.join(new_cent, ["sub", "cell"], "left_anti")
-        cent = new_cent.unionByName(kept).localCheckpoint()
-        assigned = pq_assign(sub, cent)
-    return cent
+    return lloyd(_subvectors(e, m), seeds, "svec", n_iter, group=("sub",))
 
 
 def pq_encode(e: DataFrame, cent: DataFrame, m: int = _PQ_M) -> DataFrame:
     """(vec_id, sub, cell) PQ codes — m small ints per vector instead of
     d floats; the only corpus-sized relation ADC search ever touches."""
-    return pq_assign(_subvectors(e, m), cent).select("vec_id", "sub", "cell")
+    return nearest_centroid(_subvectors(e, m), cent, "svec", ("sub",)).select(
+        "vec_id", "sub", "cell"
+    )
 
 
 #: ADC shortlist size before exact re-ranking.
@@ -577,88 +326,22 @@ _PQ_SHORTLIST = 100
 
 def _sql_pq_parts(m: int = _PQ_M, k: int = _PQ_K, n_iter: int = _PQ_ITERS) -> list[str]:
     """The shared CTE chain of the PQ-ANN oracles: joint codebook
-    training (Lloyd iterations unrolled, same scheme as
-    :func:`_sql_kmeans`), encoding (``codes``), and the query's ADC
-    lookup table (``adc``). ``x_embed_pq_topk`` appends the whole-corpus
-    shortlist; ``x_knn_ivfpq_topk`` appends a coarse-cell-restricted one.
-    Portable for the same reasons as the k-means oracle; the subspace
-    slice v[s·w+1 : s·w+w] matches Spark's 1-based ``slice`` exactly."""
-    q = "1000000000.0"
-    sq = (
-        "list_dot_product("
-        "list_transform(generate_series(1, len(s.svec)), i -> s.svec[i] - c.cvec[i]), "
-        "list_transform(generate_series(1, len(s.svec)), i -> s.svec[i] - c.cvec[i]))"
-    )
-    parts = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        f"""sub AS MATERIALIZED (
-          SELECT vec_id, m.sub,
-                 v[m.sub * (len(v) // {m}) + 1 : m.sub * (len(v) // {m}) + (len(v) // {m})] AS svec
-          FROM e, LATERAL (SELECT unnest(range(0, {m})) AS sub) m
-        )""",
-        f"""c0 AS MATERIALIZED (
-          SELECT sub, CAST(rn - 1 AS INT) AS cell, svec AS cvec FROM (
-            SELECT sub, svec,
-                   ROW_NUMBER() OVER (PARTITION BY sub ORDER BY vec_id) AS rn
-            FROM sub
-          ) WHERE rn <= {k}
-        )""",
-    ]
-
-    def assign(c: str, a: str) -> list[str]:
-        return [
-            f"""{a}_all AS (
-              SELECT s.vec_id, s.sub, s.svec, c.cell, {sq} AS dist
-              FROM sub s JOIN {c} c ON c.sub = s.sub
-            )""",
-            f"""{a} AS MATERIALIZED (
-              SELECT vec_id, sub, svec, cell, dist FROM (
-                SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                             ORDER BY dist, cell) AS rn
-                FROM {a}_all
-              ) WHERE rn = 1
-            )""",
-        ]
-
-    def update(a: str, cprev: str, c: str) -> list[str]:
-        return [
-            f"""{c}_new AS MATERIALIZED (
-              SELECT sub, cell, list(cd ORDER BY dim) AS cvec FROM (
-                SELECT sub, cell, dim,
-                       CAST(SUM(CAST(floor(v_el * {q}) AS BIGINT)) AS DOUBLE)
-                         / COUNT(v_el) / {q} AS cd
-                FROM (SELECT sub, cell,
-                             unnest(generate_series(1, len(svec))) AS dim,
-                             unnest(svec) AS v_el
-                      FROM {a})
-                GROUP BY sub, cell, dim
-              ) GROUP BY sub, cell
-            )""",
-            f"""{c} AS MATERIALIZED (
-              SELECT sub, cell, cvec FROM {c}_new
-              UNION ALL
-              SELECT p.sub, p.cell, p.cvec
-              FROM {cprev} p ANTI JOIN {c}_new n
-                ON n.sub = p.sub AND n.cell = p.cell
-            )""",
-        ]
-
-    parts += assign("c0", "a0")
-    for i in range(1, n_iter + 1):
-        parts += update(f"a{i-1}", f"c{i-1}", f"c{i}")
-        parts += assign(f"c{i}", f"a{i}")
-    cfin = f"c{n_iter}"
+    training (:func:`centroids.sql_lloyd_parts` over the m subspaces), encoding
+    (``codes``), and the query's ADC lookup table (``adc``).
+    ``x_embed_pq_topk`` appends the whole-corpus shortlist;
+    ``x_knn_ivfpq_topk`` appends a coarse-cell-restricted one."""
+    parts = sql_lloyd_parts(k, n_iter, m=m)
     parts += [
         f"codes AS MATERIALIZED (SELECT vec_id, sub, cell FROM a{n_iter})",
-        f"""qsub AS (SELECT sub, svec AS qvec FROM sub WHERE vec_id = 0)""",
+        "qsub AS (SELECT sub, v AS qvec FROM pts WHERE vec_id = 0)",
         f"""adc AS (
           SELECT c.sub, c.cell,
                  list_dot_product(
                    list_transform(generate_series(1, len(c.cvec)), i -> c.cvec[i] - t.qvec[i]),
                    list_transform(generate_series(1, len(c.cvec)), i -> c.cvec[i] - t.qvec[i])) AS adc
-          FROM {cfin} c JOIN qsub t ON t.sub = c.sub
+          FROM c{n_iter} c JOIN qsub t ON t.sub = c.sub
         )""",
-        """qv AS (SELECT v FROM e WHERE vec_id = 0)""",
+        "qv AS (SELECT v FROM e WHERE vec_id = 0)",
     ]
     return parts
 
@@ -752,11 +435,10 @@ _IVFPQ_SHORTLIST = 100  # ADC shortlist within the probed cells (PQ convention)
 
 
 def _sql_ivfpq_topk() -> str:
-    from .centroids import _SQL_CENTROIDS
     from .similarity import _SQL_COSINE
 
     coarse = [
-        f"cd AS ({_SQL_CENTROIDS})",
+        f"cd AS ({sql_centroids()})",
         """cent AS (
           SELECT label, list(centroid ORDER BY dim) AS centroid
           FROM cd GROUP BY label
@@ -808,7 +490,6 @@ def x_knn_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-rank all replay in SQL (the shared :func:`_sql_pq_parts` chain +
     the x_knn_ivf_topk probe CTE). pytest pins recall@10 vs the exact
     scan and agreement with the unrestricted PQ path."""
-    from .centroids import centroids_assembled
     from .similarity import cosine
 
     t = tables(spark, sf_dir)

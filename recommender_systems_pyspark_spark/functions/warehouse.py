@@ -36,11 +36,13 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.skew import salted_join
 from ..registry import exact_sum, query, sql_exact_sum
 from ..session import scoped_conf
 from ..sources import tables
+from ..sources.sinks import rows_frame
 
 
 # ---------------------------------------------------------------------------
@@ -826,7 +828,7 @@ def x_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             # tables WITHOUT invalidating the returned (otherwise-lazy) frame.
             # Leaving xbj_* behind made the query green only once per checkout
             # (LOCATION_ALREADY_EXISTS on every later run — VERDICT r7 #3).
-            return spark.createDataFrame(agg.collect(), agg.schema)
+            return rows_frame(spark, agg.collect(), agg.schema)
     finally:
         purge_table(spark, "xbj_orders")
         purge_table(spark, "xbj_lineitem")
@@ -1235,6 +1237,21 @@ def _files_per_toplevel_partition(version_dir: str) -> dict[str, int]:
     return counts
 
 
+def _file_counts(spark: SparkSession, store: str, before: int, after: int) -> DataFrame:
+    """(source, n_files_before, n_files_after): data files per source
+    partition of snapshot versions ``before`` and ``after`` of ``store``,
+    one row per source of ``before``."""
+    import os
+
+    n_before = _files_per_toplevel_partition(os.path.join(store, f"v={before}"))
+    n_after = _files_per_toplevel_partition(os.path.join(store, f"v={after}"))
+    return rows_frame(
+        spark,
+        [(src, n, n_after.get(src, 0)) for src, n in sorted(n_before.items())],
+        StructType.fromDDL("source string, n_files_before bigint, n_files_after bigint"),
+    )
+
+
 @query(
     "x_compaction_apply",
     oracle=f"""
@@ -1323,19 +1340,8 @@ def x_compaction_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.expr("bit_xor(rh)").alias(f"checksum_{suffix}"),
             )
 
-        fs_counts = spark.createDataFrame(
-            [
-                (src, before, _files_per_toplevel_partition(
-                    os.path.join(store, f"v={v2}")
-                ).get(src, 0))
-                for src, before in sorted(
-                    _files_per_toplevel_partition(os.path.join(store, f"v={v1}")).items()
-                )
-            ],
-            "source string, n_files_before bigint, n_files_after bigint",
-        )
         out = (
-            fs_counts.join(certify(v1, "before"), "source")
+            _file_counts(spark, store, v1, v2).join(certify(v1, "before"), "source")
             .join(certify(v2, "after"), "source")
             .select(
                 "source",
@@ -1583,10 +1589,13 @@ def x_snapshot_asof_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             v = version_asof(path, ts)
             if v is None:
                 frames.append(
-                    spark.createDataFrame(
+                    rows_frame(
+                        spark,
                         [(ts, 0, 0, 0, 0)],
-                        "probe_ts bigint, version int, n_rows bigint, "
-                        "key_checksum bigint, bal_cents bigint",
+                        StructType.fromDDL(
+                            "probe_ts bigint, version int, n_rows bigint, "
+                            "key_checksum bigint, bal_cents bigint"
+                        ),
                     )
                 )
                 continue

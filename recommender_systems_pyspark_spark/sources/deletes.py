@@ -227,7 +227,7 @@ def x_mor_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..functions.warehouse import (
         _doc_fingerprint,
-        _files_per_toplevel_partition,
+        _file_counts,
         _pack_manifest,
     )
     from ..sources.versioned import read_snapshot, write_snapshot
@@ -310,17 +310,8 @@ def x_mor_compact_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.bit_xor(_doc_fingerprint()).alias("checksum_after"),
             )
         )
-        files_before = _files_per_toplevel_partition(os.path.join(store, f"v={v1}"))
-        files_after = _files_per_toplevel_partition(os.path.join(store, f"v={v2}"))
-        fs_counts = spark.createDataFrame(
-            [
-                (src, n, files_after.get(src, 0))
-                for src, n in sorted(files_before.items())
-            ],
-            "source string, n_files_before bigint, n_files_after bigint",
-        )
         out = (
-            ledger.join(F.broadcast(fs_counts), "source")
+            ledger.join(F.broadcast(_file_counts(spark, store, v1, v2)), "source")
             .join(after, "source", "left")
             .select(
                 "source",

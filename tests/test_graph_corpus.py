@@ -205,18 +205,33 @@ def test_repetition_flags_repeated_text(spark):
 
 def test_kmeans_inertia_monotone_and_deterministic(spark, sf_dir):
     """Lloyd's guarantees non-increasing inertia; deterministic seeding and
-    quantized centroid updates make reruns identical."""
-    from recommender_systems_pyspark_spark.functions.vectors import kmeans
+    quantized centroid updates make reruns identical. The inertia trace is
+    the assignment's total distance after each one-round lloyd step."""
+    from pyspark.sql import functions as FF
+
+    from recommender_systems_pyspark_spark.functions.vectors import (
+        kmeans,
+        lloyd,
+        nearest_centroid,
+    )
 
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id", "embedding")
-    a1, inertia = kmeans(e, k=4, n_iter=4)
+
+    def train() -> tuple[list[float], set[tuple[int, int]]]:
+        cent = kmeans(e, k=4, n_iter=0)  # the seeds
+        inertia = []
+        for _ in range(4):
+            cent = lloyd(e, cent, "embedding", 1)
+            assigned = nearest_centroid(e, cent, "embedding")
+            inertia.append(assigned.agg(FF.sum("dist")).collect()[0][0])
+        return inertia, {(r.vec_id, r.cell) for r in assigned.collect()}
+
+    inertia, rows1 = train()
     for prev, nxt in zip(inertia, inertia[1:]):
         assert nxt <= prev * (1 + 1e-9), f"inertia increased: {inertia}"
-    rows1 = {(r.vec_id, r.cell) for r in a1.collect()}
     assert len(rows1) == e.count()  # every vector assigned exactly once
     assert len({c for _, c in rows1}) <= 4
-    a2, _ = kmeans(e, k=4, n_iter=4)
-    rows2 = {(r.vec_id, r.cell) for r in a2.collect()}
+    _, rows2 = train()
     assert rows1 == rows2
 
 

@@ -217,13 +217,25 @@ def test_insert_rows_runs_no_python_worker(spark, tmpdir, monkeypatch):
 
 
 @pytest.mark.parametrize(
-    "name", ["j7_range_join", "x_vocab_coverage", "x_bpe_train", "x_lda_topics"]
+    "name",
+    [
+        "j7_range_join",
+        "x_vocab_coverage",
+        "x_bpe_train",
+        "x_lda_topics",
+        "x_bucketed_join",
+        "x_compaction_apply",
+        "x_snapshot_asof_ts",
+        "x_mor_compact_e2e",
+    ],
 )
 def test_driver_list_frames_run_no_python_worker(spark, name, monkeypatch):
     """The small frames these queries build from driver lists (price bands,
-    vocabulary sizes, the learned merge table, the LDA vocabulary) are
-    Arrow local relations: no frame the query creates scans an RDD, which
-    createDataFrame(<list>) would have made with a Python-worker stage."""
+    vocabulary sizes, the learned merge table, the LDA vocabulary, the
+    bucketed join's collected answer, per-source file counts, an as-of
+    probe's empty answer) are Arrow local relations: no frame the query
+    creates scans an RDD, which createDataFrame(<list>) would have made
+    with a Python-worker stage."""
     from recommender_systems_pyspark_spark.registry import all_queries
 
     plans = []
